@@ -14,848 +14,68 @@ value-hash matches):
   always cast).
 * Dates are cast to DATE; every computed column is aliased identically
   in the Spark plan and the SQL text.
+
+Rows live in family modules: ``registry_relational``, ``registry_misc``,
+``registry_text``, ``registry_curation``, ``registry_web`` and
+``registry_audit``.  Each exports ``QUERIES`` (name → Spark query
+function), ``oracle_sql()`` (name → DuckDB SQL) and ``UNIONS`` (union
+row → the two rows it runs verbatim as legs).  This module merges them
+once.  Every union leg, and every row in ``DROPPED``, leaves
+``SPARK_QUERIES`` but stays importable and gate-checkable by name through
+``RETIRED_QUERIES`` / ``RETIRED_ORACLE_SQL``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .operators import aggregates as agg_ops
-from .operators import joins as join_ops
-from .operators import reshape as reshape_ops
-from .operators import windows as win_ops
+from . import (
+    registry_audit,
+    registry_curation,
+    registry_misc,
+    registry_relational,
+    registry_text,
+    registry_web,
+)
+from .registry_relational import q_monthly_median
 from .session import load_tables, read_table
 
-# ---------------------------------------------------------------------------
-# helpers
+_FAMILIES = (
+    registry_relational,
+    registry_misc,
+    registry_text,
+    registry_curation,
+    registry_web,
+    registry_audit,
+)
 
-DEC = "decimal(18,2)"
+# Retired without a union: topk_other runs the identical join_ops.enrich
+# broadcast chain under the oracle.
+DROPPED = ("dim_enrichment",)
 
 
+# Table reader bench.py and tools/profile_queries.py warm the read
+# cache with.
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_table(spark, sf_dir, name)
 
 
-def _revenue_dec() -> F.Column:
-    """Exact decimal l_extendedprice*(1-l_discount)."""
-    price = F.col("l_extendedprice").cast(DEC)
-    disc = F.col("l_discount").cast(DEC)
-    return price * (F.lit(1).cast(DEC) - disc)
-
-
-def cents(col: str | F.Column) -> F.Column:
-    """2-decimal money column → exact integer cents.
-
-    Integer-cents aggregation is ~4× faster than decimal128 sums and
-    produces bit-identical doubles after the final division (both
-    engines round-to-nearest the same exact rational).  The inputs are
-    2-decimal values, so round(x*100) recovers the integer exactly —
-    x*100 lands within 1 ulp of it, never at a .5 boundary.  Row
-    magnitudes: price ≤ ~1e5 → cents ≤ 1e7; long sums stay exact far
-    beyond harness scale (overflow would need ~1e11 rows of max price).
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(c * 100).cast("long")
-
-
-def _revenue_cents() -> F.Column:
-    """Revenue in cents·100 units (scale 4): price_c × (100 − disc_c)."""
-    return cents("l_extendedprice") * (F.lit(100) - cents("l_discount"))
-
-
-# the same expressions in DuckDB SQL
-SQL_CENTS = "CAST(round({col} * 100) AS BIGINT)"
-SQL_REV_CENTS = (
-    "CAST(round(l_extendedprice * 100) AS BIGINT)"
-    " * (100 - CAST(round(l_discount * 100) AS BIGINT))"
-)
-
-
-def _r6(c):
-    return F.round(c, 6)
-
-
-# ---------------------------------------------------------------------------
-# Q: trip rollup (A1/A2 + M4 indicators) — survey trip totals analog:
-# lineitem grouped by order with carry-along order attributes, then
-# CPUE-style per-unit indicator.  R/preprocessing-surveys.R:773-786,
-# R/validation.R:332-359, R/export.R:88-116.
-
-
-def q_trip_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    per_trip = lineitem.groupBy("l_orderkey").agg(
-        F.sum(cents("l_quantity")).alias("qty_c"),
-        F.sum(_revenue_cents()).alias("rev_c"),
-        F.count(F.lit(1)).alias("n_items"),
-    )
-    carry = orders.select(
-        F.col("o_orderkey").alias("l_orderkey"),
-        F.col("o_orderdate").cast("date").alias("order_date"),
-        "o_orderpriority",
-    )
-    out = per_trip.join(carry, "l_orderkey", "left")
-    # price-per-unit indicator (M4 price/kg analog); Inf normalized to NULL.
-    # Quantized to micro-units in pure BIGINT arithmetic (half-up via
-    # integer division) so Spark and any ANSI-SQL engine produce the exact
-    # same double: ratio = (rev_c/1e4)/(qty_c/1e2) = rev_c/(100*qty_c);
-    # micro = floor(ratio*1e6 + 0.5) = (2e6*rev_c + 100*qty_c) div (200*qty_c).
-    ppu_micro = F.expr(
-        "CASE WHEN qty_c > 0 THEN (rev_c * 2000000 + qty_c * 100) div (qty_c * 200) END"
-    )
-    return out.select(
-        "l_orderkey",
-        (F.col("qty_c") / 100.0).alias("total_qty"),
-        (F.col("rev_c") / 10000.0).alias("revenue"),
-        "n_items",
-        "order_date",
-        "o_orderpriority",
-        (ppu_micro / 1000000.0).alias("price_per_unit"),
-    )
-
-
-SQL_TRIP_ROLLUP = """
-WITH per_trip AS (
-  SELECT
-    l_orderkey,
-    SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS qty_c,
-    SUM(CAST(round(l_extendedprice * 100) AS BIGINT)
-        * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS rev_c,
-    COUNT(*) AS n_items
-  FROM lineitem GROUP BY l_orderkey
-)
-SELECT
-  p.l_orderkey,
-  p.qty_c / 100.0 AS total_qty,
-  p.rev_c / 10000.0 AS revenue,
-  p.n_items,
-  CAST(o.o_orderdate AS DATE) AS order_date,
-  o.o_orderpriority,
-  (CASE WHEN p.qty_c > 0
-        THEN (p.rev_c * 2000000 + p.qty_c * 100) // (p.qty_c * 200)
-   END) / 1000000.0 AS price_per_unit
-FROM per_trip p LEFT JOIN orders o ON p.l_orderkey = o.o_orderkey
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q: dimension enrichment chain (J1) — star joins lineitem→supplier→
-# nation→region then aggregate.  R/preprocessing-surveys.R:974-1016.
-
-
-def q_dim_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = _t(spark, sf_dir, "lineitem")
-    supplier = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
-    enriched = join_ops.enrich(
-        lineitem.withColumn("rev_c", _revenue_cents()),
-        [
-            (supplier.select(F.col("s_suppkey").alias("l_suppkey"), "s_nationkey"), "l_suppkey"),
-            (nation.select(F.col("n_nationkey").alias("s_nationkey"), "n_name", "n_regionkey"), "s_nationkey"),
-            (region.select(F.col("r_regionkey").alias("n_regionkey"), "r_name"), "n_regionkey"),
-        ],
-    )
-    return (
-        enriched.groupBy("r_name", "l_returnflag")
-        .agg(
-            (F.sum("rev_c") / 10000.0).alias("revenue"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .select("r_name", "l_returnflag", "revenue", "n_rows")
-    )
-
-
-SQL_DIM_ENRICHMENT = """
-SELECT
-  r.r_name, l.l_returnflag,
-  SUM(CAST(round(l.l_extendedprice * 100) AS BIGINT)
-      * (100 - CAST(round(l.l_discount * 100) AS BIGINT))) / 10000.0 AS revenue,
-  COUNT(*) AS n_rows
-FROM lineitem l
-LEFT JOIN supplier s ON l.l_suppkey = s.s_suppkey
-LEFT JOIN nation n ON s.s_nationkey = n.n_nationkey
-LEFT JOIN region r ON n.n_regionkey = r.r_regionkey
-GROUP BY r.r_name, l.l_returnflag
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q: monthly median with calendar densification (A3 + D2 + R7) — the
-# flagship "monthly median CPUE by district" shape (R/export.R:568-602):
-# month-truncate, exact median per (nation, month), then complete the
-# month spine emitting NULL rows for missing months.
-
-
-def q_monthly_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    facts = (
-        orders.join(
-            F.broadcast(customer.select(F.col("c_custkey").alias("o_custkey"), "c_nationkey")),
-            "o_custkey",
-        )
-        .join(
-            F.broadcast(nation.select(F.col("n_nationkey").alias("c_nationkey"), "n_name")),
-            "c_nationkey",
-        )
-        .select(
-            "n_name",
-            F.date_trunc("month", F.col("o_orderdate")).cast("date").alias("month"),
-            "o_totalprice",
-        )
-    )
-    monthly = facts.groupBy("n_name", "month").agg(
-        _r6(F.percentile(F.col("o_totalprice"), F.lit(0.5))).alias("median_price"),
-        F.count(F.lit(1)).alias("n_orders"),
-    )
-    dense = reshape_ops.complete_months(
-        monthly, ["n_name"], "month", fill={"n_orders": F.lit(0)}
-    )
-    return dense.select("n_name", "month", "median_price", "n_orders")
-
-
-SQL_MONTHLY_MEDIAN = """
-WITH facts AS (
-  SELECT n.n_name,
-         CAST(date_trunc('month', o.o_orderdate) AS DATE) AS month,
-         o.o_totalprice
-  FROM orders o
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN nation n ON c.c_nationkey = n.n_nationkey
-),
-monthly AS (
-  SELECT n_name, month,
-         ROUND(quantile_cont(o_totalprice, 0.5), 6) AS median_price,
-         COUNT(*) AS n_orders
-  FROM facts GROUP BY n_name, month
-),
-spine AS (
-  SELECT CAST(unnest(generate_series(
-           (SELECT MIN(month) FROM monthly),
-           (SELECT MAX(month) FROM monthly),
-           INTERVAL 1 MONTH)) AS DATE) AS month
-),
-dims AS (SELECT DISTINCT n_name FROM monthly)
-SELECT d.n_name, s.month, m.median_price,
-       COALESCE(m.n_orders, 0) AS n_orders
-FROM dims d CROSS JOIN spine s
-LEFT JOIN monthly m ON m.n_name = d.n_name AND m.month = s.month
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q: top-k with Other rollup (W1/W2) — top-3 brands per supplier nation
-# by revenue, remainder bucketed as 'Other' and re-aggregated
-# (R/export.R:636-693).
-
-
-def q_topk_other(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    supplier = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    enriched = join_ops.enrich(
-        lineitem.withColumn("rev_c", _revenue_cents()),
-        [
-            (part.select(F.col("p_partkey").alias("l_partkey"), "p_brand"), "l_partkey"),
-            (supplier.select(F.col("s_suppkey").alias("l_suppkey"), "s_nationkey"), "l_suppkey"),
-            (nation.select(F.col("n_nationkey").alias("s_nationkey"), "n_name"), "s_nationkey"),
-        ],
-    )
-    per_brand = enriched.groupBy("n_name", "p_brand").agg(
-        F.sum("rev_c").alias("rev_c")
-    )
-    # ranking on the exact integer total — no float ties possible
-    ranked = win_ops.rank_in_group(per_brand, ["n_name"], "rev_c", True, "_rk", ["p_brand"])
-    bucketed = ranked.withColumn(
-        "brand",
-        F.when(F.col("_rk") <= 3, F.col("p_brand")).otherwise(F.lit("Other")),
-    )
-    return (
-        bucketed.groupBy("n_name", "brand")
-        .agg((F.sum("rev_c") / 10000.0).alias("revenue"))
-        .select("n_name", "brand", "revenue")
-    )
-
-
-SQL_TOPK_OTHER = """
-WITH per_brand AS (
-  SELECT n.n_name, p.p_brand,
-         SUM(CAST(round(l.l_extendedprice * 100) AS BIGINT)
-             * (100 - CAST(round(l.l_discount * 100) AS BIGINT))) AS rev_c
-  FROM lineitem l
-  JOIN part p ON l.l_partkey = p.p_partkey
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN nation n ON s.s_nationkey = n.n_nationkey
-  GROUP BY n.n_name, p.p_brand
-),
-ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY n_name ORDER BY rev_c DESC, p_brand) AS rk
-  FROM per_brand
-)
-SELECT n_name,
-       CASE WHEN rk <= 3 THEN p_brand ELSE 'Other' END AS brand,
-       SUM(rev_c) / 10000.0 AS revenue
-FROM ranked
-GROUP BY n_name, CASE WHEN rk <= 3 THEN p_brand ELSE 'Other' END
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q: robust MAD outlier bounds (A7) — per-brand log-scale median±k·MAD
-# bounds on extended price, the reference's main custom aggregate
-# (R/validation-functions.R:43-69,108-132).
-
-
-def q_robust_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    joined = lineitem.join(
-        F.broadcast(part.select(F.col("p_partkey").alias("l_partkey"), "p_brand")),
-        "l_partkey",
-    )
-    bounds = agg_ops.robust_bounds(joined, ["p_brand"], "l_extendedprice", k=3.0)
-    return bounds.select(
-        "p_brand",
-        _r6(F.col("lower_bound")).alias("lower_bound"),
-        _r6(F.col("upper_bound")).alias("upper_bound"),
-    )
-
-
-SQL_ROBUST_BOUNDS = """
-WITH x AS (
-  SELECT p.p_brand, ln(l.l_extendedprice) AS lx
-  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-  WHERE l.l_extendedprice > 0
-),
-med AS (
-  SELECT p_brand, quantile_cont(lx, 0.5) AS med FROM x GROUP BY p_brand
-),
-stats AS (
-  SELECT x.p_brand,
-         ANY_VALUE(m.med) AS med,
-         quantile_cont(ABS(x.lx - m.med), 0.5) AS mad
-  FROM x JOIN med m ON x.p_brand = m.p_brand
-  GROUP BY x.p_brand
-)
-SELECT p_brand,
-       ROUND(CASE WHEN mad > 0 THEN exp(med - 3.0 * 1.4826 * mad) END, 6) AS lower_bound,
-       ROUND(CASE WHEN mad > 0 THEN exp(med + 3.0 * 1.4826 * mad) END, 6) AS upper_bound
-FROM stats
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q: unpivot to long metrics (R8) — quantity/price/discount stacked into
-# (metric_type, metric_value) per order-line, then aggregated monthly:
-# the reference's long "fishery metrics" normalization
-# (R/preprocessing-surveys.R:795-804, R/export.R:201-205).
-
-
-def q_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = _t(spark, sf_dir, "lineitem")
-    prepared = lineitem.select(
-        F.date_trunc("month", F.col("l_shipdate")).cast("date").alias("month"),
-        cents("l_quantity").alias("quantity"),
-        cents("l_extendedprice").alias("price"),
-        cents("l_discount").alias("discount"),
-    )
-    long = reshape_ops.unpivot(
-        prepared, ["month"], ["quantity", "price", "discount"],
-        "metric_type", "metric_value",
-    )
-    return (
-        long.groupBy("month", "metric_type")
-        .agg(
-            (F.sum("metric_value") / 100.0).alias("metric_total"),
-            F.count(F.lit(1)).alias("n_values"),
-        )
-        .select("month", "metric_type", "metric_total", "n_values")
-    )
-
-
-SQL_UNPIVOT_METRICS = """
-WITH long AS (
-  SELECT CAST(date_trunc('month', l_shipdate) AS DATE) AS month,
-         metric_type, metric_value
-  FROM (
-    SELECT l_shipdate,
-           CAST(round(l_quantity * 100) AS BIGINT) AS quantity,
-           CAST(round(l_extendedprice * 100) AS BIGINT) AS price,
-           CAST(round(l_discount * 100) AS BIGINT) AS discount
-    FROM lineitem
-  ) UNPIVOT (metric_value FOR metric_type IN (quantity, price, discount))
-)
-SELECT month, metric_type,
-       SUM(metric_value) / 100.0 AS metric_total,
-       COUNT(*) AS n_values
-FROM long GROUP BY month, metric_type
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q: long→wide pivot (R2) — order counts per nation pivoted by order
-# status (R/export.R:373-381 pivot_wider).
-
-
-def q_pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    joined = orders.join(
-        F.broadcast(customer.select(F.col("c_custkey").alias("o_custkey"), "c_nationkey")),
-        "o_custkey",
-    ).join(
-        F.broadcast(nation.select(F.col("n_nationkey").alias("c_nationkey"), "n_name")),
-        "c_nationkey",
-    )
-    statuses = ["F", "O", "P"]
-    pivoted = (
-        joined.groupBy("n_name")
-        .pivot("o_orderstatus", statuses)
-        .agg(F.count(F.lit(1)))
-    )
-    out = pivoted
-    for s in statuses:
-        out = out.withColumn(s, F.coalesce(F.col(s), F.lit(0)).cast("long"))
-    return out.select("n_name", *[F.col(s).alias(f"status_{s}") for s in statuses])
-
-
-SQL_PIVOT_STATUS = """
-SELECT n.n_name,
-       CAST(COUNT(*) FILTER (WHERE o.o_orderstatus = 'F') AS BIGINT) AS status_F,
-       CAST(COUNT(*) FILTER (WHERE o.o_orderstatus = 'O') AS BIGINT) AS status_O,
-       CAST(COUNT(*) FILTER (WHERE o.o_orderstatus = 'P') AS BIGINT) AS status_P
-FROM orders o
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-GROUP BY n.n_name
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q: semi/anti join (J6/J7) — customers partitioned into with/without
-# recent orders (validation's flagged-id exclusion shape,
-# R/validation.R:315-317,432-440).
-
-
-def q_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    recent = orders.filter(F.col("o_orderdate") >= F.lit("1999-01-01")).select(
-        F.col("o_custkey").alias("c_custkey")
-    )
-    with_recent = join_ops.semi_join(customer, recent, "c_custkey").select(
-        "c_custkey", "c_mktsegment", F.lit("active").alias("cohort")
-    )
-    without = join_ops.anti_join(customer, recent, "c_custkey").select(
-        "c_custkey", "c_mktsegment", F.lit("inactive").alias("cohort")
-    )
-    both = with_recent.unionByName(without)
-    return (
-        both.groupBy("c_mktsegment", "cohort")
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-        .select("c_mktsegment", "cohort", "n_customers")
-    )
-
-
-SQL_SEMI_ANTI = """
-WITH recent AS (
-  SELECT DISTINCT o_custkey FROM orders WHERE o_orderdate >= TIMESTAMP '1999-01-01'
-),
-cohorts AS (
-  SELECT c_custkey, c_mktsegment,
-         CASE WHEN c_custkey IN (SELECT o_custkey FROM recent)
-              THEN 'active' ELSE 'inactive' END AS cohort
-  FROM customer
-)
-SELECT c_mktsegment, cohort, COUNT(*) AS n_customers
-FROM cohorts GROUP BY c_mktsegment, cohort
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q: TPC-H Q1 shape — the canonical pricing-summary report (grouped
-# multi-aggregate with filters), exact decimal arithmetic throughout.
-
-
-def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = _t(spark, sf_dir, "lineitem")
-    # integer units: cents for linear terms, cents·100 for disc_price,
-    # cents·10000 for charge — all exact in BIGINT at harness scale
-    charge_c = cents("l_extendedprice") * (F.lit(100) - cents("l_discount")) * (
-        F.lit(100) + cents("l_tax")
-    )
-    filtered = lineitem.filter(F.col("l_shipdate") <= F.lit("2001-06-01"))
-    return (
-        filtered.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            (F.sum(cents("l_quantity")) / 100.0).alias("sum_qty"),
-            (F.sum(cents("l_extendedprice")) / 100.0).alias("sum_base_price"),
-            (F.sum(_revenue_cents()) / 10000.0).alias("sum_disc_price"),
-            (F.sum(charge_c) / 1000000.0).alias("sum_charge"),
-            (F.sum(cents("l_quantity")) / 100.0 / F.count(F.lit(1))).alias("avg_qty"),
-            (F.sum(cents("l_extendedprice")) / 100.0 / F.count(F.lit(1))).alias("avg_price"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        .select(
-            "l_returnflag", "l_linestatus", "sum_qty", "sum_base_price",
-            "sum_disc_price", "sum_charge",
-            _r6(F.col("avg_qty")).alias("avg_qty"),
-            _r6(F.col("avg_price")).alias("avg_price"),
-            "count_order",
-        )
-    )
-
-
-SQL_PRICING_SUMMARY = """
-SELECT l_returnflag, l_linestatus,
-       SUM(CAST(round(l_quantity * 100) AS BIGINT)) / 100.0 AS sum_qty,
-       SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) / 100.0 AS sum_base_price,
-       SUM(CAST(round(l_extendedprice * 100) AS BIGINT)
-           * (100 - CAST(round(l_discount * 100) AS BIGINT))) / 10000.0 AS sum_disc_price,
-       SUM(CAST(round(l_extendedprice * 100) AS BIGINT)
-           * (100 - CAST(round(l_discount * 100) AS BIGINT))
-           * (100 + CAST(round(l_tax * 100) AS BIGINT))) / 1000000.0 AS sum_charge,
-       ROUND(SUM(CAST(round(l_quantity * 100) AS BIGINT)) / 100.0 / COUNT(*), 6) AS avg_qty,
-       ROUND(SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) / 100.0 / COUNT(*), 6) AS avg_price,
-       COUNT(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '2001-06-01'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-# ---------------------------------------------------------------------------
-# registry assembly
-
-
-from . import registry_relational
-
-SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "trip_rollup": q_trip_rollup,
-    "dim_enrichment": q_dim_enrichment,
-    "monthly_median": q_monthly_median,
-    "topk_other": q_topk_other,
-    "robust_bounds": q_robust_bounds,
-    "unpivot_metrics": q_unpivot_metrics,
-    "pivot_status": q_pivot_status,
-    "semi_anti": q_semi_anti,
-    "pricing_summary": q_pricing_summary,
-}
-
-ORACLE_SQL: dict[str, str] = {
-    "trip_rollup": SQL_TRIP_ROLLUP,
-    "dim_enrichment": SQL_DIM_ENRICHMENT,
-    "monthly_median": SQL_MONTHLY_MEDIAN,
-    "topk_other": SQL_TOPK_OTHER,
-    "robust_bounds": SQL_ROBUST_BOUNDS,
-    "unpivot_metrics": SQL_UNPIVOT_METRICS,
-    "pivot_status": SQL_PIVOT_STATUS,
-    "semi_anti": SQL_SEMI_ANTI,
-    "pricing_summary": SQL_PRICING_SUMMARY,
-}
-
-SPARK_QUERIES.update(registry_relational.SPARK_QUERIES)
-ORACLE_SQL.update(registry_relational.ORACLE_SQL)
-
-from . import registry_curation, registry_misc, registry_text  # noqa: E402
-
-SPARK_QUERIES.update(registry_text.SPARK_QUERIES)
-ORACLE_SQL.update(registry_text.ORACLE_SQL)
-SPARK_QUERIES.update(registry_misc.SPARK_QUERIES)
-ORACLE_SQL.update(registry_misc.ORACLE_SQL)
-SPARK_QUERIES.update(registry_curation.SPARK_QUERIES)
-ORACLE_SQL.update(registry_curation.ORACLE_SQL)
-
-from . import registry_audit, registry_staged  # noqa: E402
-
-# r9 staged-row promotion (VERDICT r8 Next #1): the three consolidation
-# union rows + the train_shards new row move from registry_staged into
-# the registry, each with bit-exact sf0.001+sf0.01 oracle evidence
-# attached one round ahead (tests/test_registry_staged.py).
-_STAGED_PROMOTED = (
-    "doc_profile",
-    "doc_signature",
-    "funnel_cohorts",
-    "train_shards",
-)
-for _n in _STAGED_PROMOTED:
-    SPARK_QUERIES[_n] = registry_staged.STAGED_QUERIES[_n]
-    ORACLE_SQL[_n] = registry_staged.STAGED_ORACLE_SQL[_n]
-
-SPARK_QUERIES.update(registry_audit.SPARK_QUERIES)
-ORACLE_SQL.update(registry_audit.build_oracle_sql())
-
-from . import registry_staged_r10  # noqa: E402
-
-# r10 staged-row promotion (VERDICT r9 Next #1): the quant_audit
-# consolidation (ann_int8 + pooled_ann legs verbatim) plus the four new
-# operator rows (seq_layout / contam_score / psl_domains / card_audit)
-# move from registry_staged_r10 into the registry, each with bit-exact
-# sf0.001+sf0.01 oracle evidence attached one round ahead
-# (tests/test_registry_staged_r10.py).
-_STAGED_PROMOTED_R10 = (
-    "quant_audit",
-    "seq_layout",
-    "contam_score",
-    "psl_domains",
-    "card_audit",
-)
-_STAGED_SQL_R10 = registry_staged_r10.build_staged_oracle_sql()
-for _n in _STAGED_PROMOTED_R10:
-    SPARK_QUERIES[_n] = registry_staged_r10.STAGED_QUERIES[_n]
-    ORACLE_SQL[_n] = _STAGED_SQL_R10[_n]
-
-from . import registry_r10  # noqa: E402
-
-# r10 in-round rows (VERDICT r9 Next #3): three union consolidations
-# freeing head slots within the rotating-in set, plus first hard oracle
-# rows for calibrate_threshold / segment_languages / embedding_drift.
-SPARK_QUERIES.update(registry_r10.SPARK_QUERIES)
-ORACLE_SQL.update(registry_r10.build_oracle_sql())
-
-from . import registry_staged_r11  # noqa: E402
-
-# r11 staged-row promotion (VERDICT r10 Next #1 / the NOTES FINAL
-# recipe): four consolidation unions (governance_audit, neardup_audit,
-# lexstats_audit, ivf_audit) plus five new operator rows (fetch_audit,
-# html_extract, link_graph, crawl_audit, image_dups) move from
-# registry_staged_r11 into the registry, each with bit-exact
-# sf0.001+sf0.01 oracle evidence and a recorded sf0.1 local[8] +
-# sf0.01 local[3] determinism matrix attached one round ahead
-# (tests/test_registry_staged_r11.py).
-_STAGED_PROMOTED_R11 = (
-    "governance_audit",
-    "neardup_audit",
-    "lexstats_audit",
-    "ivf_audit",
-    "fetch_audit",
-    "html_extract",
-    "link_graph",
-    "crawl_audit",
-    "image_dups",
-)
-_STAGED_SQL_R11 = registry_staged_r11.build_staged_oracle_sql()
-for _n in _STAGED_PROMOTED_R11:
-    SPARK_QUERIES[_n] = registry_staged_r11.STAGED_QUERIES[_n]
-    ORACLE_SQL[_n] = _STAGED_SQL_R11[_n]
-
-from . import registry_r11  # noqa: E402
-
-# r11 in-round rows (the registry_r10 precedent): one union made
-# WITHIN the rotating-in set (summary_audit = pricing_summary +
-# rollup_summary, legs verbatim) funds the first hard oracle row for
-# the round-11 spatial surface (geo_assign — ray-cast region
-# assignment).  Head stays 50, registry stays 98.
-SPARK_QUERIES.update(registry_r11.SPARK_QUERIES)
-ORACLE_SQL.update(registry_r11.build_oracle_sql())
-
-from . import registry_staged_r12  # noqa: E402
-
-# r12 staged-row promotion (VERDICT r11 Next #1 / the NOTES r12 swap
-# recipe): the sketchfam_audit consolidation (sketch_audit +
-# hist_quantiles legs verbatim) plus three new operator rows
-# (diversity_sample, audio_audit, video_audit) move from
-# registry_staged_r12 into the registry, each with bit-exact
-# sf0.001+sf0.01 oracle evidence and a recorded sf0.1 local[8] +
-# sf0.01 local[3] determinism matrix attached one round ahead
-# (tests/test_registry_staged_r12.py).  Registry lands at
-# 98 − 2 + 1 + 3 = 100, AT the rotation ceiling.
-_STAGED_PROMOTED_R12 = (
-    "diversity_sample",
-    "audio_audit",
-    "sketchfam_audit",
-    "video_audit",
-)
-_STAGED_SQL_R12 = registry_staged_r12.build_staged_oracle_sql()
-for _n in _STAGED_PROMOTED_R12:
-    SPARK_QUERIES[_n] = registry_staged_r12.STAGED_QUERIES[_n]
-    ORACLE_SQL[_n] = _STAGED_SQL_R12[_n]
-
-from . import registry_r12  # noqa: E402
-
-# r12 in-round rows (the registry_r10/r11 precedent): one union made
-# WITHIN the rotating-in set (weights_audit = dsir_weights +
-# temperature_resample, legs verbatim) funds the first hard oracle row
-# for the KMV bottom-k sketch family (kmv_audit — VERDICT r11 Next #4).
-# Head stays 50, registry stays 100.
-SPARK_QUERIES.update(registry_r12.SPARK_QUERIES)
-ORACLE_SQL.update(registry_r12.build_oracle_sql())
-
-from . import registry_staged_r13  # noqa: E402
-
-# r13 staged-row promotion (VERDICT r12 Next #1/#2 / the NOTES r13 swap
-# recipe): the three funding consolidations chosen at r12 close with
-# sight of the rotating tail (docmeta_audit = doc_profile ⋈
-# doc_signature; retrieval_audit = bm25_indexed + hybrid_rrf;
-# capsel_audit = source_cap + quality_topk — all legs verbatim) fund
-# the three staged operator rows (pca_cov, audio_fp, corpus_card);
-# the two FURTHER staged rows (nearest_audit, release_fold) are funded
-# by the registry_r13 in-round consolidations below.  Every row
-# carries bit-exact sf0.001+sf0.01 oracle evidence plus an sf0.1
-# local[8] + sf0.01 local[3] determinism matrix recorded one round
-# ahead (tests/test_registry_staged_r13.py).
-_STAGED_PROMOTED_R13 = (
-    "pca_cov",
-    "audio_fp",
-    "corpus_card",
-    "docmeta_audit",
-    "retrieval_audit",
-    "capsel_audit",
-    "nearest_audit",
-    "release_fold",
-)
-_STAGED_SQL_R13 = registry_staged_r13.build_staged_oracle_sql()
-for _n in _STAGED_PROMOTED_R13:
-    SPARK_QUERIES[_n] = registry_staged_r13.STAGED_QUERIES[_n]
-    ORACLE_SQL[_n] = _STAGED_SQL_R13[_n]
-
-from . import registry_r13  # noqa: E402
-
-# r13 in-round rows (the registry_r10/r11/r12 precedent): two unions
-# made WITHIN the rotating-in set (crawlfam_audit = fetch_audit +
-# crawl_audit; geofam_audit = geo_assign + geo_rollup_join, legs
-# verbatim) fund the hard oracle rows for the haversine/argmin surface
-# (nearest_audit) and the release-integrity manifest fold
-# (release_fold).  Head stays 50, registry stays 100.
-SPARK_QUERIES.update(registry_r13.SPARK_QUERIES)
-ORACLE_SQL.update(registry_r13.build_oracle_sql())
-
-from . import registry_staged_r14  # noqa: E402
-
-# r14 staged-row promotion (VERDICT r13 Next #1 / the NOTES r14 swap
-# recipe): the two funding consolidations chosen at r13 close with
-# sight of the r14 rotating-in set (bandpairs_audit = minhash_dedup +
-# simhash_pairs; dedupfam_audit = dedup_exact + dedup_clusters — legs
-# verbatim) fund the two staged operator rows (main_content_audit,
-# diff_audit).  Every row carries bit-exact sf0.001+sf0.01 oracle
-# evidence plus an sf0.1 local[8] + sf0.01 local[3] determinism
-# matrix recorded one round ahead (tests/test_registry_staged_r14.py).
-# Head arithmetic: 50 − 4 legs + 2 unions + 2 funded = 50; registry
-# stays AT the 100 ceiling.
-_STAGED_PROMOTED_R14 = (
-    "main_content_audit",
-    "diff_audit",
-    "bandpairs_audit",
-    "dedupfam_audit",
-)
-_STAGED_SQL_R14 = registry_staged_r14.build_staged_oracle_sql()
-for _n in _STAGED_PROMOTED_R14:
-    SPARK_QUERIES[_n] = registry_staged_r14.STAGED_QUERIES[_n]
-    ORACLE_SQL[_n] = _STAGED_SQL_R14[_n]
-
-# r9 consolidations: every name below is replaced by a union row that
-# calls the SAME query function / wraps the SAME oracle SQL (see
-# registry_staged.STAGED_REPLACES and registry_audit.AUDIT_REPLACES),
-# so the operators stay implemented, pytest-covered and hash-verified —
-# only the duplicate registry rows go.  dim_enrichment is row-dropped
-# without a union: topk_other exercises the identical join_ops.enrich
-# broadcast chain under the oracle every rotation (the r7 bm25_search
-# same-expression precedent).  The q_* functions and SQL strings all
-# stay importable for the local gate tooling and the union legs.
-_REPLACED_R9 = (
-    # by the staged consolidation rows
-    "text_quality",
-    "lang_id",
-    "doc_fingerprint",
-    "doc_winnow",
-    "conversion_funnel",
-    "retention_cohorts",
-    # by the rotation-window union rows (registry_audit)
-    "semi_anti",
-    "except_keys",
-    "string_ops",
-    "iso_format",
-    "running_total",
-    "pct_of_group",
-    "data_split",
-    "sample_mix",
-    "rank_lookup",
-    "rank_inference",
-    "ann_cosine",
-    "ann_pq",
-    "unpivot_metrics",
-    "pivot_status",
-    # row drop: same-oracle-expression coverage via topk_other
-    "dim_enrichment",
-)
-# Retired rows stay importable AND gate-checkable by name: the union
-# rows call the same functions / wrap the same SQL, so a retired name
-# can still be bit-exact-verified on demand
-# (`python tools/check_correctness.py text_quality` falls back here).
-RETIRED_QUERIES: dict = {}
-RETIRED_ORACLE_SQL: dict = {}
-for _n in _REPLACED_R9:
-    RETIRED_QUERIES[_n] = SPARK_QUERIES.pop(_n)
-    RETIRED_ORACLE_SQL[_n] = ORACLE_SQL.pop(_n)
-
-# r10 consolidation: quant_audit runs the ann_int8 and pooled_ann query
-# functions verbatim as its two legs (registry_staged_r10.STAGED_REPLACES),
-# so both operators stay implemented, pytest-covered and hash-verified —
-# only the duplicate registry rows retire (gate-checkable by name).
-_REPLACED_R10 = tuple(registry_staged_r10.STAGED_REPLACES["quant_audit"]) + tuple(
-    n for pair in registry_r10.AUDIT_REPLACES.values() for n in pair
-)
-for _n in _REPLACED_R10:
-    RETIRED_QUERIES[_n] = SPARK_QUERIES.pop(_n)
-    RETIRED_ORACLE_SQL[_n] = ORACLE_SQL.pop(_n)
-
-# r11 consolidations: each union row calls the SAME query functions /
-# wraps the SAME oracle SQL (registry_staged_r11.STAGED_REPLACES), so
-# the eight consolidated operators stay implemented, pytest-covered and
-# hash-verified — only the duplicate registry rows retire
-# (gate-checkable by name, the r9/r10 retirement discipline).
-_REPLACED_R11 = tuple(
-    n for pair in registry_staged_r11.STAGED_REPLACES.values() for n in pair
-) + tuple(n for pair in registry_r11.AUDIT_REPLACES.values() for n in pair)
-for _n in _REPLACED_R11:
-    RETIRED_QUERIES[_n] = SPARK_QUERIES.pop(_n)
-    RETIRED_ORACLE_SQL[_n] = ORACLE_SQL.pop(_n)
-
-# r12 consolidation: sketchfam_audit runs the sketch_audit and
-# hist_quantiles query functions verbatim as its two legs
-# (registry_staged_r12.STAGED_REPLACES), so both operators stay
-# implemented, pytest-covered and hash-verified — only the duplicate
-# registry rows retire (gate-checkable by name, the r9–r11 retirement
-# discipline).
-_REPLACED_R12 = tuple(
-    n for pair in registry_staged_r12.STAGED_REPLACES.values() for n in pair
-) + tuple(n for pair in registry_r12.AUDIT_REPLACES.values() for n in pair)
-for _n in _REPLACED_R12:
-    RETIRED_QUERIES[_n] = SPARK_QUERIES.pop(_n)
-    RETIRED_ORACLE_SQL[_n] = ORACLE_SQL.pop(_n)
-
-# r13 consolidations: each union row calls the SAME query functions /
-# wraps the SAME oracle SQL (registry_staged_r13.STAGED_REPLACES and
-# registry_r13.AUDIT_REPLACES), so the ten consolidated operators stay
-# implemented, pytest-covered and hash-verified — only the duplicate
-# registry rows retire (gate-checkable by name, the r9–r12 retirement
-# discipline).
-_REPLACED_R13 = tuple(
-    n for pair in registry_staged_r13.STAGED_REPLACES.values() for n in pair
-) + tuple(n for pair in registry_r13.AUDIT_REPLACES.values() for n in pair)
-for _n in _REPLACED_R13:
-    RETIRED_QUERIES[_n] = SPARK_QUERIES.pop(_n)
-    RETIRED_ORACLE_SQL[_n] = ORACLE_SQL.pop(_n)
-
-# r14 consolidations: each union row calls the SAME query functions /
-# wraps the SAME oracle SQL (registry_staged_r14.STAGED_REPLACES), so
-# the four consolidated operators stay implemented, pytest-covered and
-# hash-verified — only the duplicate registry rows retire
-# (gate-checkable by name, the r9–r13 retirement discipline).
-_REPLACED_R14 = tuple(
-    n for pair in registry_staged_r14.STAGED_REPLACES.values() for n in pair
-)
-for _n in _REPLACED_R14:
-    RETIRED_QUERIES[_n] = SPARK_QUERIES.pop(_n)
-    RETIRED_ORACLE_SQL[_n] = ORACLE_SQL.pop(_n)
+_QUERIES: dict = {}
+_ORACLE_SQL: dict[str, str] = {}
+UNIONS: dict[str, tuple[str, str]] = {}
+for _fam in _FAMILIES:
+    assert not _fam.QUERIES.keys() & _QUERIES.keys(), _fam.__name__
+    _QUERIES.update(_fam.QUERIES)
+    _ORACLE_SQL.update(_fam.oracle_sql())
+    UNIONS.update(_fam.UNIONS)
+assert _QUERIES.keys() == _ORACLE_SQL.keys()
+
+_RETIRED = {leg for legs in UNIONS.values() for leg in legs} | set(DROPPED)
+assert _RETIRED <= _QUERIES.keys()
+RETIRED_QUERIES = {n: q for n, q in _QUERIES.items() if n in _RETIRED}
+RETIRED_ORACLE_SQL = {n: _ORACLE_SQL[n] for n in RETIRED_QUERIES}
+SPARK_QUERIES = {n: q for n, q in _QUERIES.items() if n not in _RETIRED}
+ORACLE_SQL = {n: _ORACLE_SQL[n] for n in SPARK_QUERIES}
 
 # The driver's correctness harness checks the FIRST 50 registry entries
 # in dict order; with >50 queries registered, assembly order decides
@@ -866,14 +86,6 @@ for _n in _REPLACED_R14:
 # queries with several green driver rounds (still covered by the
 # bit-exact local gate, tools/check_correctness.py) rotate out.
 _VERIFY_FIRST = [
-    # r15 rotation (VERDICT r14 Next #3): a PURE head/tail swap — the
-    # 50 rows that rested through r14 (driver-green in r13) come back
-    # to the head so CORRECTNESS_r15 gives every one a hard driver
-    # row; the 50 r14-verified rows rest in the tail.  NO composition
-    # change: r15 is an optimization round (registrations are feature
-    # work, and removing a bench row is a regression by contract), so
-    # the staged registry_staged_r15 promotion stays staged for the
-    # next build round.
     "pca_cov",
     "audio_fp",
     "corpus_card",
@@ -934,9 +146,6 @@ _VERIFY_FIRST = [
 # the rotating-in set (not the outgoing head, whose survivors rest in
 # the tail regardless).
 _VERIFY_LAST = [
-    # the 50 r14-head rows — every one driver-green in CORRECTNESS_r14
-    # (50/50 rows+schema+hash).  They rest this round and rotate back
-    # at r16.
     "bandpairs_audit",
     "dedupfam_audit",
     "main_content_audit",

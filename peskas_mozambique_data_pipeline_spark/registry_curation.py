@@ -1,6 +1,7 @@
-"""Query registry batch 4: corpus-governance operators — per-source
-contribution caps, snapshot diffing, token-distribution drift, and the
-PQ/ADC ANN tier.
+"""Data-curation registry rows: per-source contribution caps, snapshot
+and release diffing, token-distribution drift, the PQ/ADC ANN tier,
+sampling weights and budgets, sketches, shuffles and shards, sequence
+layout, threshold calibration, diversity sampling and data cards.
 
 Same oracle-portability rules as registry_text: md5 for all hashing,
 integer micro-unit quantization before any float SUM, ROUND(..., 6)
@@ -13,7 +14,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators import curation as cur_ops
+from .operators import sketches as sk_ops
+from .operators.text import tokens as _tokens
+from .plans.report import ZONE_ORDER
 from .session import read_table
+
+_S = "string"
+_L = "long"
+_D = "double"
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -163,19 +171,6 @@ FROM terms GROUP BY grp
 """
 
 
-SPARK_QUERIES = {
-    "source_cap": q_source_cap,
-    "corpus_diff": q_corpus_diff,
-    "token_drift": q_token_drift,
-}
-
-ORACLE_SQL = {
-    "source_cap": SQL_SOURCE_CAP,
-    "corpus_diff": SQL_CORPUS_DIFF,
-    "token_drift": SQL_TOKEN_DRIFT,
-}
-
-
 # ---------------------------------------------------------------------------
 # Q: PQ/ADC approximate nearest neighbors (Jégou et al. 2011) — the
 # memory-compression ANN tier alongside brute/LSH/IVF.  m=2 subspaces
@@ -309,9 +304,6 @@ SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank,
        ROUND(ad, 6) AS approx_dist
 FROM ranked WHERE rank <= 5
 """
-
-SPARK_QUERIES["ann_pq"] = q_ann_pq
-ORACLE_SQL["ann_pq"] = SQL_ANN_PQ
 
 
 # ---------------------------------------------------------------------------
@@ -471,9 +463,6 @@ FROM ranked WHERE rank <= 5
 
 SQL_ANN_IVFPQ = _sql_ann_ivfpq()
 
-SPARK_QUERIES["ann_ivfpq"] = q_ann_ivfpq
-ORACLE_SQL["ann_ivfpq"] = SQL_ANN_IVFPQ
-
 
 # ---------------------------------------------------------------------------
 # Q: W3 per-group mode under the oracle — plans/metrics.predominant_gear
@@ -514,9 +503,6 @@ SELECT district, year_month, gear_type AS predominant_gear,
        CAST(gear_count AS BIGINT) AS gear_count
 FROM ranked WHERE rk = 1
 """
-
-SPARK_QUERIES["predominant_mode"] = q_predominant_mode
-ORACLE_SQL["predominant_mode"] = SQL_PREDOMINANT_MODE
 
 
 # ---------------------------------------------------------------------------
@@ -702,9 +688,6 @@ SELECT district, year_month, metric_type, ROUND(metric_value, 6),
 FROM species
 """
 
-SPARK_QUERIES["metrics_table"] = q_metrics_table
-ORACLE_SQL["metrics_table"] = SQL_METRICS_TABLE
-
 
 # ---------------------------------------------------------------------------
 # Q: BPE merge training (Sennrich et al. 2016) unrolled — the third
@@ -715,12 +698,6 @@ ORACLE_SQL["metrics_table"] = SQL_METRICS_TABLE
 # application.
 
 _BPE_N = 6
-
-
-def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.text import bpe_merge_table
-
-    return bpe_merge_table(_docs(spark, sf_dir), n_merges=_BPE_N)
 
 
 def _bpe_oracle_sql(n_merges: int) -> str:
@@ -778,12 +755,11 @@ w{k} AS MATERIALIZED (
 
 SQL_BPE_MERGES = _bpe_oracle_sql(_BPE_N)
 
-# Round-7 consolidation (VERDICT r6 Next #1): the slow-tier query row
-# is dropped from the registry — bpe_merges_fast keeps the SAME oracle,
-# so the unrolled-iteration tier stays hash-verified through the fast
-# row, and the cross-tier pytest (test_dedup_similarity_text.py:
-# fast-vs-slow 6-merge parity) keeps the slow operator covered.
-# q_bpe_merges stays importable for tests/tools.
+
+# The slow unrolled tier (text.bpe_merge_table) has no row of its own:
+# bpe_merges_fast is checked against the unrolled oracle, and the
+# cross-tier pytest (test_dedup_similarity_text.py: fast-vs-slow
+# 6-merge parity) keeps the slow operator covered.
 
 
 def q_bpe_merges_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -797,10 +773,6 @@ def q_bpe_merges_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_merge_table_fast(_docs(spark, sf_dir), n_merges=_BPE_N).select(
         "step", "left", "right", "pair_count"
     )
-
-
-SPARK_QUERIES["bpe_merges_fast"] = q_bpe_merges_fast
-ORACLE_SQL["bpe_merges_fast"] = SQL_BPE_MERGES
 
 
 # ---------------------------------------------------------------------------
@@ -858,9 +830,6 @@ WITH assigned AS (
 SELECT lang, split, CAST(COUNT(*) AS BIGINT) AS n_docs
 FROM assigned GROUP BY lang, split
 """
-
-SPARK_QUERIES["data_split"] = q_data_split
-ORACLE_SQL["data_split"] = SQL_DATA_SPLIT
 
 
 # ---------------------------------------------------------------------------
@@ -931,9 +900,6 @@ FROM segd GROUP BY lang
 
 SQL_BPE_FERTILITY = _bpe_fertility_sql(_BPE_N)
 
-SPARK_QUERIES["bpe_fertility"] = q_bpe_fertility
-ORACLE_SQL["bpe_fertility"] = SQL_BPE_FERTILITY
-
 
 # ---------------------------------------------------------------------------
 # Q: DSIR importance weights (Xie et al. 2023) — log-likelihood ratio
@@ -980,9 +946,6 @@ SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
 FROM tok2 JOIN scores USING (token)
 GROUP BY doc_id
 """
-
-SPARK_QUERIES["dsir_weights"] = q_dsir_weights
-ORACLE_SQL["dsir_weights"] = SQL_DSIR_WEIGHTS
 
 
 # ---------------------------------------------------------------------------
@@ -1044,24 +1007,6 @@ SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
          AS frac_kept
 FROM k GROUP BY source
 """
-
-SPARK_QUERIES["temperature_resample"] = q_temperature_resample
-ORACLE_SQL["temperature_resample"] = SQL_TEMPERATURE_RESAMPLE
-
-
-# ---------------------------------------------------------------------------
-# Q: deterministic sketches under the oracle.  Spark's built-in
-# approx_count_distinct is HLL++ with an implementation-private
-# register layout — unreplayable by another engine.  operators/
-# sketches.py builds HLL and count-min purely from md5 + integer
-# arithmetic, so DuckDB reproduces the EXACT estimate and the hard
-# value-hash gate applies to an approximate operator.  hll_distinct
-# audits the estimate against the exact distinct count per source;
-# cms_topk audits count-min point estimates (one-sided: never below
-# the true count) for the exact top-10 tokens.
-
-from .operators import sketches as sk_ops
-from .operators.text import tokens as _tokens
 
 
 def _doc_tokens(
@@ -1190,9 +1135,6 @@ FROM probe p LEFT JOIN sketch s ON p.i = s.i AND p.cell = s.cell
 GROUP BY p.token, p.n_exact
 """
 
-SPARK_QUERIES["sketch_audit"] = q_sketch_audit
-ORACLE_SQL["sketch_audit"] = SQL_SKETCH_AUDIT
-
 
 # ---------------------------------------------------------------------------
 # Q: histogram-sketch quantiles — the single-pass-class approximate
@@ -1245,9 +1187,6 @@ SELECT g AS o_orderpriority, q AS quantile,
 FROM probe WHERE cm >= tgt AND cm - cc < tgt
 """
 
-SPARK_QUERIES["hist_quantiles"] = q_hist_quantiles
-ORACLE_SQL["hist_quantiles"] = SQL_HIST_QUANTILES
-
 
 # ---------------------------------------------------------------------------
 # Q: deterministic weighted sampling without replacement (Efraimidis–
@@ -1285,9 +1224,6 @@ r AS (
 SELECT source, doc_id, n_chars, priority_q FROM r WHERE rn <= 10
 """
 
-SPARK_QUERIES["weighted_sample"] = q_weighted_sample
-ORACLE_SQL["weighted_sample"] = SQL_WEIGHTED_SAMPLE
-
 
 # ---------------------------------------------------------------------------
 # Q: ordering/shuffle-quality audit — per-source lag-1 clumping of the
@@ -1324,9 +1260,6 @@ SELECT adj.g AS source, n_docs,
 FROM adj JOIN tot USING (g), n
 """
 
-SPARK_QUERIES["mix_quality"] = q_mix_quality
-ORACLE_SQL["mix_quality"] = SQL_MIX_QUALITY
-
 
 # ---------------------------------------------------------------------------
 # Q: deterministic corpus shuffle — the training-order permutation.
@@ -1356,9 +1289,6 @@ SELECT doc_id,
        ) - 1 AS BIGINT) AS shuffle_pos
 FROM documents
 """
-
-SPARK_QUERIES["corpus_shuffle"] = q_corpus_shuffle
-ORACLE_SQL["corpus_shuffle"] = SQL_CORPUS_SHUFFLE
 
 
 # ---------------------------------------------------------------------------
@@ -1437,9 +1367,6 @@ SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank,
 FROM ranked WHERE rank <= 5
 """
 
-SPARK_QUERIES["ann_int8"] = q_ann_int8
-ORACLE_SQL["ann_int8"] = SQL_ANN_INT8
-
 
 # ---------------------------------------------------------------------------
 # Q: pooled-document retrieval (operators/similarity.py::
@@ -1505,9 +1432,6 @@ FROM ranked WHERE rank <= 5
 
 
 SQL_POOLED_ANN = _sql_pool_ann()
-
-SPARK_QUERIES["pooled_ann"] = q_pooled_ann
-ORACLE_SQL["pooled_ann"] = SQL_POOLED_ANN
 
 
 # ---------------------------------------------------------------------------
@@ -1600,5 +1524,695 @@ SELECT source, n_tokens, weight, cap_tokens, draw_tokens,
 FROM solved
 """
 
-SPARK_QUERIES["mixture_budget"] = q_mixture_budget
-ORACLE_SQL["mixture_budget"] = SQL_MIXTURE_BUDGET
+
+# ---------------------------------------------------------------------------
+# train_shards — token-budget shard assignment over the deterministic
+# training order: the Spark side composes deterministic_shuffle (dense
+# rank, no global window) with token_shard_ids (distributed prefix sum
+# of token counts, no global window); the oracle IS the single-node
+# global running-sum window — a hash match proves the two-phase prefix
+# sum equals the global cumulative sum bit-for-bit, the corpus_shuffle
+# proof extended from ranks to weighted prefix sums.
+
+_SHARD_SALT = "r9shards"
+_SHARD_TOKENS = 5_000
+
+
+def q_train_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .operators import curation as cur_ops
+    from .operators.text import token_count
+
+    docs = read_table(spark, sf_dir, "documents").select(
+        "doc_id", token_count("text").cast("long").alias("n_tok")
+    )
+    # fused shuffle + prefix sum (r14): one range exchange, one
+    # checkpoint and one bounded collect produce both shuffle_pos and
+    # tok_before — bit-identical to the former deterministic_shuffle →
+    # token_shard_ids two-stage pipeline (parity pytest in
+    # tests/test_curation.py); the shard id is the same exact BIGINT
+    # division token_shard_ids applied
+    cum = cur_ops.shuffled_token_cum(
+        docs, "doc_id", salt=_SHARD_SALT, tokens_col="n_tok"
+    )
+    return cum.select(
+        "doc_id",
+        F.col("shuffle_pos").cast("long").alias("shuffle_pos"),
+        "n_tok",
+        F.expr(f"tok_before div {int(_SHARD_TOKENS)}").cast("long").alias("shard_id"),
+    )
+
+
+SQL_TRAIN_SHARDS = f"""
+WITH t AS (
+  SELECT doc_id,
+         CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_tok,
+         md5('{_SHARD_SALT}_' || CAST(doc_id AS VARCHAR)) AS sk
+  FROM documents
+)
+SELECT doc_id,
+       CAST(ROW_NUMBER() OVER (ORDER BY sk, doc_id) - 1 AS BIGINT) AS shuffle_pos,
+       n_tok,
+       CAST(COALESCE(SUM(n_tok) OVER (
+           ORDER BY sk, doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+       ), 0) // {_SHARD_TOKENS} AS BIGINT) AS shard_id
+FROM t
+"""
+
+
+# ---------------------------------------------------------------------------
+# seq_layout — concat-and-split placement over the deterministic
+# corpus order.  seq_len is prime so sequence boundaries land inside
+# documents of every size (the interesting split cases).
+
+_SEQ_SALT = "seq0"
+_SEQ_LEN = 257
+
+
+def q_seq_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .operators import curation as cur_ops
+    from .operators.text import token_count
+
+    docs = read_table(spark, sf_dir, "documents").select(
+        "doc_id", token_count("text").cast("long").alias("n_tok")
+    )
+    # fused shuffle + prefix sum (r14): one range exchange / checkpoint
+    # / bounded collect instead of two — the placement arithmetic below
+    # is exactly concat_split_layout's, on the identical tok_before
+    # integers (parity pytest in tests/test_curation.py)
+    cum = cur_ops.shuffled_token_cum(
+        docs, "doc_id", salt=_SEQ_SALT, tokens_col="n_tok"
+    )
+    L = int(_SEQ_LEN)
+    tok = F.col("n_tok").cast("long")
+    out = (
+        cum.withColumn("seq_id", F.expr(f"tok_before div {L}"))
+        .withColumn("seq_offset", F.pmod(F.col("tok_before"), F.lit(L)).cast("long"))
+        .withColumn(
+            "end_seq",
+            F.when(tok > 0, F.expr(f"(tok_before + n_tok - 1) div {L}"))
+            .otherwise(F.col("seq_id"))
+            .cast("long"),
+        )
+        .withColumn("n_seqs", (F.col("end_seq") - F.col("seq_id") + 1).cast("long"))
+    )
+    return out.select(
+        "doc_id",
+        F.col("shuffle_pos").cast(_L).alias("shuffle_pos"),
+        "n_tok",
+        "tok_before",
+        "seq_id",
+        "seq_offset",
+        "end_seq",
+        "n_seqs",
+    )
+
+
+SQL_SEQ_LAYOUT = f"""
+WITH t AS (
+  SELECT doc_id,
+         CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_tok,
+         md5('{_SEQ_SALT}_' || CAST(doc_id AS VARCHAR)) AS sk
+  FROM documents
+),
+o AS (
+  SELECT doc_id, n_tok,
+         CAST(ROW_NUMBER() OVER (ORDER BY sk, doc_id) - 1 AS BIGINT) AS shuffle_pos,
+         CAST(COALESCE(SUM(n_tok) OVER (
+             ORDER BY sk, doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+         ), 0) AS BIGINT) AS tok_before
+  FROM t
+),
+s AS (
+  SELECT *,
+         tok_before // {_SEQ_LEN} AS seq_id,
+         tok_before % {_SEQ_LEN} AS seq_offset,
+         CASE WHEN n_tok > 0 THEN (tok_before + n_tok - 1) // {_SEQ_LEN}
+              ELSE tok_before // {_SEQ_LEN} END AS end_seq
+  FROM o
+)
+SELECT doc_id, shuffle_pos, n_tok, tok_before,
+       CAST(seq_id AS BIGINT) AS seq_id,
+       CAST(seq_offset AS BIGINT) AS seq_offset,
+       CAST(end_seq AS BIGINT) AS end_seq,
+       CAST(end_seq - seq_id + 1 AS BIGINT) AS n_seqs
+FROM s
+"""
+
+
+# ---------------------------------------------------------------------------
+# card_audit — Luhn-validated card redaction under the hard oracle.
+# Host text embeds one 16-digit run per doc (4100…+doc_id); consecutive
+# integers are Luhn-valid exactly one-in-ten, so validity coverage is
+# structural, not hand-picked.  The oracle replays the mod-10 checksum
+# digit-by-digit (reverse → alternate doubling → sum) and the literal
+# replacement — all exact integer/string work.
+
+
+def q_card_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .operators.text import luhn_valid, redact_cards
+
+    docs = read_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.concat(
+            F.lit("ref "),
+            (F.lit(4100000000000000) + F.col("doc_id")).cast("string"),
+            F.lit(" end"),
+        ).alias("text"),
+    )
+    out = redact_cards(docs)
+    return out.select(
+        "doc_id",
+        F.col("n_cards").cast(_L).alias("n_cards"),
+        "redacted",
+        luhn_valid(
+            (F.lit(4100000000000000) + F.col("doc_id")).cast("string")
+        ).alias("is_valid"),
+    )
+
+
+SQL_CARD_AUDIT = """
+WITH t AS (
+  SELECT doc_id,
+         CAST(4100000000000000 + doc_id AS VARCHAR) AS num,
+         'ref ' || CAST(4100000000000000 + doc_id AS VARCHAR) || ' end' AS text
+  FROM documents
+),
+v AS (
+  SELECT *,
+         (list_reduce(list_transform(generate_series(1, len(num)),
+            i -> CASE WHEN i % 2 = 0 THEN
+                   CASE WHEN 2 * CAST(substr(reverse(num), i, 1) AS INT) > 9
+                        THEN 2 * CAST(substr(reverse(num), i, 1) AS INT) - 9
+                        ELSE 2 * CAST(substr(reverse(num), i, 1) AS INT) END
+                 ELSE CAST(substr(reverse(num), i, 1) AS INT) END),
+            (a, b) -> a + b) % 10 = 0) AS is_valid
+  FROM t
+)
+SELECT doc_id,
+       CAST(CASE WHEN is_valid THEN 1 ELSE 0 END AS BIGINT) AS n_cards,
+       CASE WHEN is_valid THEN replace(text, num, '[CARD]') ELSE text END
+         AS redacted,
+       is_valid
+FROM v
+"""
+
+
+# ---------------------------------------------------------------------------
+# threshold_audit — calibrate_threshold under the hard oracle.  Score =
+# (doc_id*37) % 101 (exact small integers as double: one representable
+# value per residue), label = score-plus-mod-7-noise rule so every
+# confusion cell is populated.  The operator's window runs over ≤101
+# DISTINCT scores — the bounded-validation-set shape it documents.
+
+
+def q_threshold_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .operators.classifier import calibrate_threshold
+
+    scored = read_table(spark, sf_dir, "documents").select(
+        ((F.col("doc_id") * 37) % 101).cast(_D).alias("score"),
+        F.when(
+            ((F.col("doc_id") * 37) % 101) + (F.col("doc_id") % 7) > 55, 1
+        )
+        .otherwise(0)
+        .alias("label"),
+    )
+    return calibrate_threshold(scored)
+
+
+SQL_THRESHOLD_AUDIT = """
+WITH scored AS (
+  SELECT CAST((doc_id * 37) % 101 AS DOUBLE) AS score,
+         CASE WHEN ((doc_id * 37) % 101) + (doc_id % 7) > 55
+              THEN 1 ELSE 0 END AS label
+  FROM documents
+),
+per AS (
+  SELECT score,
+         CAST(SUM(CASE WHEN label = 1 THEN 1 ELSE 0 END) AS BIGINT) AS pos,
+         CAST(SUM(CASE WHEN label = 1 THEN 0 ELSE 1 END) AS BIGINT) AS neg
+  FROM scored GROUP BY score
+),
+cum AS (
+  SELECT score,
+         CAST(SUM(pos) OVER w AS BIGINT) AS tp,
+         CAST(SUM(neg) OVER w AS BIGINT) AS fp,
+         CAST(SUM(pos) OVER () - SUM(pos) OVER w AS BIGINT) AS fn
+  FROM per
+  WINDOW w AS (ORDER BY score DESC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+)
+SELECT score AS threshold, tp, fp, fn,
+       CAST(CASE WHEN tp + fp > 0 THEN (tp * 1000000000) // (tp + fp)
+                 ELSE 1000000000 END AS BIGINT) AS precision_nano,
+       CAST(CASE WHEN tp + fn > 0 THEN (tp * 1000000000) // (tp + fn)
+                 ELSE 1000000000 END AS BIGINT) AS recall_nano,
+       CAST(CASE WHEN 2 * tp + fp + fn > 0
+                 THEN (2 * tp * 1000000000) // (2 * tp + fp + fn)
+                 ELSE 0 END AS BIGINT) AS f1_nano
+FROM cum
+"""
+
+
+# ---------------------------------------------------------------------------
+# diversity_sample — cluster-balanced diversity sampling
+# (``operators.curation.cluster_balanced_sample``, the DataComp-style
+# keep-the-topic-mix budget sampler).  Strata are nearest-centroid
+# assignments against the FIXED ``vec_id < 8`` shared-centroid table (no
+# k-means replay, one assignment pass), quality is analytic
+# (``(vec_id·37+11) mod 997``), and the budget is a literal 120, a real
+# constraint at every SF.  The oracle replays the assignment, the
+# largest-remainder (Hamilton) apportionment in BIGINT arithmetic, and
+# the per-cluster quality top-k; any drift in apportionment rounding,
+# leftover-seat ranking or tie-breaks hash-mismatches.
+
+
+_DIVERSITY_BUDGET = 120
+
+
+def q_diversity_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .operators.curation import cluster_balanced_sample
+    from .session import read_table
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    docs = emb.select(
+        "vec_id",
+        "embedding",
+        ((F.col("vec_id") * 37 + 11) % 997).cast("long").alias("quality"),
+    )
+    cents = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").cast("int").alias("centroid_id"),
+        F.col("embedding").alias("centroid"),
+    )
+    out = cluster_balanced_sample(
+        docs, cents, budget=_DIVERSITY_BUDGET, quality_col="quality",
+        id_col="vec_id",
+    )
+    return out.select(
+        F.col("vec_id").cast("long").alias("vec_id"),
+        F.col("centroid_id").cast("int").alias("centroid_id"),
+        F.col("quality").cast("long").alias("quality"),
+    )
+
+
+def _sql_diversity_sample() -> str:
+    from .registry_text import _sql_dot, _sql_norm
+
+    cos = (
+        f"({_sql_dot('e.embedding', 'c.centroid')}"
+        f" / ({_sql_norm('e.embedding')} * {_sql_norm('c.centroid')}))"
+    )
+    b = _DIVERSITY_BUDGET
+    return f"""
+WITH cents AS (
+  SELECT CAST(vec_id AS INTEGER) AS centroid_id, embedding AS centroid
+  FROM embeddings WHERE vec_id < 8
+),
+assign AS (
+  SELECT vec_id, quality, centroid_id FROM (
+    SELECT e.vec_id, CAST((e.vec_id * 37 + 11) % 997 AS BIGINT) AS quality,
+           c.centroid_id,
+           ROW_NUMBER() OVER (
+             PARTITION BY e.vec_id
+             ORDER BY {cos} DESC, c.centroid_id) AS rk
+    FROM embeddings e CROSS JOIN cents c
+  ) WHERE rk = 1
+),
+counts AS (SELECT centroid_id, COUNT(*) AS n FROM assign GROUP BY 1),
+tot AS (SELECT CAST(SUM(n) AS BIGINT) AS t FROM counts),
+q AS (
+  SELECT centroid_id, n,
+         CAST({b} AS BIGINT) * n // t AS quota,
+         CAST({b} AS BIGINT) * n % t AS rem
+  FROM counts, tot
+),
+qs AS (SELECT CAST(SUM(quota) AS BIGINT) AS qsum FROM q),
+alloc AS (
+  SELECT centroid_id,
+         quota + CASE WHEN ROW_NUMBER() OVER (ORDER BY rem DESC, centroid_id)
+                           <= CAST({b} AS BIGINT) - qsum
+                      THEN 1 ELSE 0 END AS alloc
+  FROM q, qs
+),
+ranked AS (
+  SELECT a.vec_id, a.centroid_id, a.quality, al.alloc,
+         ROW_NUMBER() OVER (
+           PARTITION BY a.centroid_id
+           ORDER BY a.quality DESC, a.vec_id) AS rn
+  FROM assign a JOIN alloc al ON a.centroid_id = al.centroid_id
+)
+SELECT CAST(vec_id AS BIGINT) AS vec_id,
+       CAST(centroid_id AS INTEGER) AS centroid_id,
+       CAST(quality AS BIGINT) AS quality
+FROM ranked WHERE rn <= alloc
+"""
+
+
+# ---------------------------------------------------------------------------
+# kmv_audit — the KMV bottom-k sketch (``operators/sketches.py::
+# kmv_sketch`` / ``kmv_estimate``).  Two legs cover BOTH estimator
+# branches: documents grouped by source (the exact ``n < k`` branch,
+# where the sketch IS the distinct hash set) and lineitem grouped by
+# return flag (the unbiased ``(k−1)·2^60 / h_k`` branch).  Every sketch
+# hash lands under the value hash via posexplode (60-bit md5 integers,
+# exact BIGINT on both engines); the estimate's float division rounds
+# to 6dp on both sides.
+
+
+_KMV_K = 64
+
+
+# ---------------------------------------------------------------------------
+# kmv_audit — bottom-k distinct sketches under the hard oracle.
+
+
+def q_kmv_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .operators.sketches import kmv_estimate, kmv_sketch
+    from .session import read_table
+
+    docs = read_table(spark, sf_dir, "documents").select(
+        F.col("source").alias("grp"), F.col("text").alias("v")
+    )
+    line = read_table(spark, sf_dir, "lineitem").select(
+        F.col("l_returnflag").alias("grp"),
+        F.col("l_orderkey").cast(_S).alias("v"),
+    )
+    # ONE sketch job over the union of both tables, keyed (tbl, grp)
+    # (r14, guide §2.4/§2.6): the former per-table loop ran the full
+    # distinct + bottom-k pipeline once per (table × leg) — four
+    # computations, then (after the materialization fix) two SERIAL
+    # checkpoint jobs, each too small to fill the cluster.  The md5
+    # hash depends only on the value, so per-(tbl, grp) bottom-k over
+    # the union is bit-identical to per-table bottom-k per grp; one
+    # checkpoint materializes every sketch row (k-bounded per group),
+    # and both output legs project from it.
+    vals = docs.select(F.lit("docs").alias("tbl"), "grp", "v").unionByName(
+        line.select(F.lit("line").alias("tbl"), "grp", "v")
+    )
+    sk = kmv_sketch(
+        vals, "v", group_cols=["tbl", "grp"], k=_KMV_K
+    ).localCheckpoint()
+    h = (
+        sk.select("tbl", F.col("grp").cast(_S).alias("grp"), F.posexplode("kmv"))
+        .select(
+            "tbl",
+            F.lit("kmv").alias("stat"),
+            "grp",
+            (F.col("pos") + 1).cast(_L).alias("pos"),
+            F.col("col").cast(_L).alias("hv"),
+            F.lit(None).cast(_D).alias("est"),
+        )
+    )
+    e = kmv_estimate(sk).select(
+        "tbl",
+        F.lit("est").alias("stat"),
+        F.col("grp").cast(_S).alias("grp"),
+        F.lit(None).cast(_L).alias("pos"),
+        F.lit(None).cast(_L).alias("hv"),
+        F.col("kmv_distinct").cast(_D).alias("est"),
+    )
+    return h.unionByName(e)
+
+
+SQL_KMV_AUDIT = f"""
+WITH vals AS (
+  SELECT 'docs' AS tbl, source AS grp, CAST(text AS VARCHAR) AS v
+  FROM documents
+  UNION ALL
+  SELECT 'line', l_returnflag, CAST(l_orderkey AS VARCHAR)
+  FROM lineitem
+),
+h AS (
+  SELECT DISTINCT tbl, grp,
+         ('0x' || substr(md5('kmv_' || v), 1, 15))::BIGINT AS hh
+  FROM vals
+),
+rk AS (
+  SELECT tbl, grp, hh,
+         ROW_NUMBER() OVER (PARTITION BY tbl, grp ORDER BY hh) AS rn
+  FROM h
+),
+bot AS (SELECT * FROM rk WHERE rn <= {_KMV_K}),
+est AS (
+  SELECT tbl, grp, COUNT(*) AS n, MAX(hh) AS hk
+  FROM bot GROUP BY tbl, grp
+)
+SELECT tbl, 'kmv' AS stat, CAST(grp AS VARCHAR) AS grp,
+       CAST(rn AS BIGINT) AS pos, CAST(hh AS BIGINT) AS hv,
+       CAST(NULL AS DOUBLE) AS est
+FROM bot
+UNION ALL
+SELECT tbl, 'est', CAST(grp AS VARCHAR), CAST(NULL AS BIGINT),
+       CAST(NULL AS BIGINT),
+       round(CASE WHEN n < {_KMV_K} THEN CAST(n AS DOUBLE)
+                  ELSE {_KMV_K - 1}.0 * 1152921504606846976.0 / hk END, 6)
+FROM est
+"""
+
+
+# ---------------------------------------------------------------------------
+# corpus_card — the data-sheet card arithmetic (``plans.report.
+# corpus_card_frames``: per-zone count/token/char aggregates plus the
+# exact-integer permille retention window).  Zone frames are ANALYTIC
+# views of ``documents`` (ingest → length filter → mod-key scrub → pack
+# rollup), so the oracle replays every zone's defining predicate, the
+# whitespace token count and the ``(a − a % b)/b`` floor-division
+# permille in plain SQL.  The ``pos`` ordering literals come from
+# ``ZONE_ORDER`` on BOTH sides, so the card's DAG order cannot drift.
+
+
+def q_corpus_card(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .plans.report import corpus_card_frames
+    from .session import read_table
+
+    # the four zone frames all derive from this one projection —
+    # materialize it once (localCheckpoint, the retrieval_audit scan-
+    # sharing discipline) so the card pays ONE parquet scan, not four
+    docs = (
+        read_table(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .localCheckpoint()
+    )
+    # analytic zone chain: each zone is a deterministic view of the one
+    # before it, so retention permilles are exactly replayable.  The
+    # upstream operators these stand in for (quality filter, scrub,
+    # packing) each carry their OWN registry rows — this row verifies
+    # the CARD arithmetic over the zone frames.
+    filtered = docs.filter(F.length("text") >= 50)
+    deduped = filtered.filter(F.col("doc_id") % 7 != 0)
+    packs = deduped.groupBy((F.col("doc_id") % 8).alias("pack_id")).agg(
+        F.count(F.lit(1)).alias("n_docs")
+    )
+    card = corpus_card_frames(
+        {
+            "corpus_ingested": docs,
+            "corpus_filtered": filtered,
+            "corpus_deduped": deduped,
+            "corpus_packs": packs,
+        }
+    )
+    return card.select(
+        "pos", "zone", "n_rows", "n_tokens", "n_chars",
+        "retained_rows_permille",
+    )
+
+
+def _sql_corpus_card() -> str:
+    pos = {z: ZONE_ORDER.index(z) for z in (
+        "corpus_ingested", "corpus_filtered", "corpus_deduped", "corpus_packs"
+    )}
+    ntok = r"SUM(len(string_split_regex(trim(text), '\s+')))"
+    return f"""
+WITH ingested AS (SELECT doc_id, text FROM documents),
+filtered AS (SELECT * FROM ingested WHERE length(text) >= 50),
+deduped AS (SELECT * FROM filtered WHERE doc_id % 7 <> 0),
+packs AS (SELECT doc_id % 8 AS pack_id, COUNT(*) AS n_docs
+          FROM deduped GROUP BY 1),
+zones AS (
+  SELECT {pos['corpus_ingested']} AS pos, 'corpus_ingested' AS zone,
+         COUNT(*) AS n_rows, {ntok} AS n_tokens,
+         SUM(length(text)) AS n_chars
+  FROM ingested
+  UNION ALL
+  SELECT {pos['corpus_filtered']}, 'corpus_filtered',
+         COUNT(*), {ntok}, SUM(length(text))
+  FROM filtered
+  UNION ALL
+  SELECT {pos['corpus_deduped']}, 'corpus_deduped',
+         COUNT(*), {ntok}, SUM(length(text))
+  FROM deduped
+  UNION ALL
+  SELECT {pos['corpus_packs']}, 'corpus_packs',
+         COUNT(*), NULL, NULL
+  FROM packs
+)
+SELECT CAST(pos AS INTEGER) AS pos, zone,
+       CAST(n_rows AS BIGINT) AS n_rows,
+       CAST(n_tokens AS BIGINT) AS n_tokens,
+       CAST(n_chars AS BIGINT) AS n_chars,
+       CAST(CASE WHEN prev IS NOT NULL AND prev > 0 THEN
+              (n_rows * 1000 - (n_rows * 1000) % prev) / prev
+            END AS BIGINT) AS retained_rows_permille
+FROM (SELECT *, LAG(n_rows) OVER (ORDER BY pos) AS prev FROM zones)
+"""
+
+
+# ---------------------------------------------------------------------------
+# release_fold — the release-integrity manifest fold under the hard
+# oracle.  ``io/parquet_io.py::release_fold``
+# groups documents by source and folds the engine-portable md5 row
+# fingerprint (15 hex digits → exact integer, summed as DECIMAL(38,0)
+# vs HUGEINT — digit-string compared, so no float ever enters).  The
+# same arithmetic already has a digit-for-digit DuckDB parity pytest
+# (tests/test_io.py::test_md5_fingerprint_fold_duckdb_parity); this row
+# carries it to the driver signal.
+
+
+def q_release_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .io.parquet_io import release_fold
+    from .session import read_table
+
+    docs = read_table(spark, sf_dir, "documents")
+    return release_fold(docs, ["source"]).select(
+        F.col("source").cast("string").alias("source"),
+        F.col("n_rows").cast("long").alias("n_rows"),
+        F.col("content_fp").cast("string").alias("content_fp"),
+    )
+
+
+def _sql_release_fold() -> str:
+    # ALL document columns sorted by name, the release_fold contract
+    cols = ["doc_id", "lang", "n_chars", "source", "text"]
+    key = "concat_ws(chr(31), " + ", ".join(
+        f"CAST({c} AS VARCHAR)" for c in sorted(cols)
+    ) + ")"
+    return f"""
+SELECT CAST(source AS VARCHAR) AS source,
+       CAST(COUNT(*) AS BIGINT) AS n_rows,
+       CAST(SUM(CAST(('0x' || substr(md5({key}), 1, 15))
+                     AS BIGINT)::HUGEINT) AS VARCHAR) AS content_fp
+FROM documents GROUP BY source
+"""
+
+
+# ---------------------------------------------------------------------------
+# diff_audit — the row-level release diff (io/parquet_io.py::row_diff)
+# under the hard oracle.  "New release" is an ANALYTIC view of
+# documents: ids ≡0 mod 11 dropped (→ removed), ids ≡0 mod 7 among the
+# survivors get their text rewritten (→ changed), and 25 synthetic
+# rows append above the id space (→ added); everything else must be
+# ABSENT from the diff.  Statuses are therefore fully determined by id
+# arithmetic, so the oracle states them with CASE/UNION — it never
+# recomputes a fingerprint, which is exactly the point: the operator's
+# md5-multiset machinery must REDISCOVER the analytic truth.
+
+
+def q_diff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .io.parquet_io import row_diff
+    from .session import read_table
+
+    old = read_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "source"
+    )
+    survivors = old.filter(F.col("doc_id") % 11 != 0)
+    modified = survivors.withColumn(
+        "text",
+        F.when(
+            F.col("doc_id") % 7 == 0,
+            F.concat(F.lit("REVISED "), F.col("text")),
+        ).otherwise(F.col("text")),
+    )
+    added = old.filter(F.col("doc_id") < 25).select(
+        (F.col("doc_id") + 1_000_000).alias("doc_id"),
+        F.concat(F.lit("new doc "), F.col("doc_id").cast(_S)).alias("text"),
+        F.lit("src_new").alias("source"),
+    )
+    new = modified.unionByName(added)
+    out = row_diff(old, new, ["doc_id"])
+    return out.select(
+        F.col("doc_id").cast(_L).alias("doc_id"),
+        F.col("status").cast(_S).alias("status"),
+    )
+
+
+SQL_DIFF_AUDIT = """
+SELECT CAST(doc_id AS BIGINT) AS doc_id, 'removed' AS status
+FROM documents WHERE doc_id % 11 = 0
+UNION ALL
+SELECT CAST(doc_id AS BIGINT), 'changed'
+FROM documents WHERE doc_id % 11 <> 0 AND doc_id % 7 = 0
+UNION ALL
+SELECT CAST(doc_id + 1000000 AS BIGINT), 'added'
+FROM documents WHERE doc_id < 25
+"""
+
+
+# ---------------------------------------------------------------------------
+# exports
+
+QUERIES = {
+    "source_cap": q_source_cap,
+    "corpus_diff": q_corpus_diff,
+    "token_drift": q_token_drift,
+    "ann_pq": q_ann_pq,
+    "ann_ivfpq": q_ann_ivfpq,
+    "predominant_mode": q_predominant_mode,
+    "metrics_table": q_metrics_table,
+    "bpe_merges_fast": q_bpe_merges_fast,
+    "data_split": q_data_split,
+    "bpe_fertility": q_bpe_fertility,
+    "dsir_weights": q_dsir_weights,
+    "temperature_resample": q_temperature_resample,
+    "sketch_audit": q_sketch_audit,
+    "hist_quantiles": q_hist_quantiles,
+    "weighted_sample": q_weighted_sample,
+    "mix_quality": q_mix_quality,
+    "corpus_shuffle": q_corpus_shuffle,
+    "ann_int8": q_ann_int8,
+    "pooled_ann": q_pooled_ann,
+    "mixture_budget": q_mixture_budget,
+    "train_shards": q_train_shards,
+    "seq_layout": q_seq_layout,
+    "card_audit": q_card_audit,
+    "threshold_audit": q_threshold_audit,
+    "diversity_sample": q_diversity_sample,
+    "kmv_audit": q_kmv_audit,
+    "corpus_card": q_corpus_card,
+    "release_fold": q_release_fold,
+    "diff_audit": q_diff_audit,
+}
+
+
+def oracle_sql() -> dict[str, str]:
+    return {
+        "source_cap": SQL_SOURCE_CAP,
+        "corpus_diff": SQL_CORPUS_DIFF,
+        "token_drift": SQL_TOKEN_DRIFT,
+        "ann_pq": SQL_ANN_PQ,
+        "ann_ivfpq": SQL_ANN_IVFPQ,
+        "predominant_mode": SQL_PREDOMINANT_MODE,
+        "metrics_table": SQL_METRICS_TABLE,
+        "bpe_merges_fast": SQL_BPE_MERGES,
+        "data_split": SQL_DATA_SPLIT,
+        "bpe_fertility": SQL_BPE_FERTILITY,
+        "dsir_weights": SQL_DSIR_WEIGHTS,
+        "temperature_resample": SQL_TEMPERATURE_RESAMPLE,
+        "sketch_audit": SQL_SKETCH_AUDIT,
+        "hist_quantiles": SQL_HIST_QUANTILES,
+        "weighted_sample": SQL_WEIGHTED_SAMPLE,
+        "mix_quality": SQL_MIX_QUALITY,
+        "corpus_shuffle": SQL_CORPUS_SHUFFLE,
+        "ann_int8": SQL_ANN_INT8,
+        "pooled_ann": SQL_POOLED_ANN,
+        "mixture_budget": SQL_MIXTURE_BUDGET,
+        "train_shards": SQL_TRAIN_SHARDS,
+        "seq_layout": SQL_SEQ_LAYOUT,
+        "card_audit": SQL_CARD_AUDIT,
+        "threshold_audit": SQL_THRESHOLD_AUDIT,
+        "diversity_sample": _sql_diversity_sample(),
+        "kmv_audit": SQL_KMV_AUDIT,
+        "corpus_card": _sql_corpus_card(),
+        "release_fold": _sql_release_fold(),
+        "diff_audit": SQL_DIFF_AUDIT,
+    }
+
+
+UNIONS: dict[str, tuple[str, str]] = {}

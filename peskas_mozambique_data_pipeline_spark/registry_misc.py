@@ -1,15 +1,21 @@
-"""Query registry batch 4: nested JSON series, regex rank inference,
+"""Assorted registry rows: nested JSON series, regex rank inference,
 string parsing, ISO formatting, key set-difference, ingest uniqueness,
-rank-dependent lookup joins, percent-of-group.
+rank-dependent lookup joins, percent-of-group, sessionization, as-of
+joins, merges and SCD2, graph rows (PageRank, triangles), time-series
+windows, and the spatial rows (ray-cast region assignment, haversine
+nearest site).
 """
 
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .session import read_table
 
+_S = "string"
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -570,7 +576,6 @@ FROM layer l LEFT JOIN rollup s ON l.region = s.region
 """
 
 
-
 # ---------------------------------------------------------------------------
 # Q: MERGE emulation (curated-zone incremental upsert) — source rows win
 # on key match, unmatched target rows kept, source-only rows insert
@@ -939,53 +944,6 @@ FROM cell GROUP BY cohort_period, periods_since
 """
 
 
-SPARK_QUERIES = {
-    "nested_series": q_nested_series,
-    "interval_join": q_interval_join,
-    "conversion_funnel": q_conversion_funnel,
-    "retention_cohorts": q_retention_cohorts,
-    "rank_inference": q_rank_inference,
-    "string_ops": q_string_ops,
-    "iso_format": q_iso_format,
-    "except_keys": q_except_keys,
-    "uniqueness_check": q_uniqueness_check,
-    "rank_lookup": q_rank_lookup,
-    "pct_of_group": q_pct_of_group,
-    "sessionization": q_sessionization,
-    "rollup_summary": q_rollup_summary,
-    "asof_join": q_asof_join,
-    "running_total": q_running_total,
-    "geo_rollup_join": q_geo_rollup_join,
-    "site_stats_full": q_site_stats_full,
-    "pii_scrub": q_pii_scrub,
-    "merge_upsert": q_merge_upsert,
-    "scd2_versions": q_scd2_versions,
-}
-
-ORACLE_SQL = {
-    "nested_series": SQL_NESTED_SERIES,
-    "interval_join": SQL_INTERVAL_JOIN,
-    "conversion_funnel": SQL_CONVERSION_FUNNEL,
-    "retention_cohorts": SQL_RETENTION_COHORTS,
-    "rank_inference": SQL_RANK_INFERENCE,
-    "string_ops": SQL_STRING_OPS,
-    "iso_format": SQL_ISO_FORMAT,
-    "except_keys": SQL_EXCEPT_KEYS,
-    "uniqueness_check": SQL_UNIQUENESS_CHECK,
-    "rank_lookup": SQL_RANK_LOOKUP,
-    "pct_of_group": SQL_PCT_OF_GROUP,
-    "sessionization": SQL_SESSIONIZATION,
-    "rollup_summary": SQL_ROLLUP_SUMMARY,
-    "asof_join": SQL_ASOF_JOIN,
-    "running_total": SQL_RUNNING_TOTAL,
-    "geo_rollup_join": SQL_GEO_ROLLUP_JOIN,
-    "site_stats_full": SQL_SITE_STATS_FULL,
-    "pii_scrub": SQL_PII_SCRUB,
-    "merge_upsert": SQL_MERGE_UPSERT,
-    "scd2_versions": SQL_SCD2_VERSIONS,
-}
-
-
 # ---------------------------------------------------------------------------
 # Q: fixed-iteration PageRank (operators/graph.py) on the symmetrized
 # order–supplier bipartite graph from lineitem — the iterative-
@@ -1063,9 +1021,6 @@ SELECT 's' || CAST((node - 1) // 2 AS VARCHAR) AS node,
 FROM r3 WHERE node % 2 = 1
 """
 
-SPARK_QUERIES["pagerank"] = q_pagerank
-ORACLE_SQL["pagerank"] = SQL_PAGERANK
-
 
 # ---------------------------------------------------------------------------
 # Q: RANGE-frame trailing window — 28-day trailing revenue per nation
@@ -1133,11 +1088,6 @@ SELECT n_name, day_idx,
        ) AS BIGINT) AS days_in_window
 FROM daily
 """
-
-SPARK_QUERIES["trailing_window"] = q_trailing_window
-ORACLE_SQL["trailing_window"] = SQL_TRAILING_WINDOW
-
-
 
 
 # ---------------------------------------------------------------------------
@@ -1220,9 +1170,6 @@ GROUP BY node
 ORDER BY triangles DESC, part ASC
 LIMIT 50
 """
-
-SPARK_QUERIES["triangle_count"] = q_triangle_count
-ORACLE_SQL["triangle_count"] = SQL_TRIANGLE_COUNT
 
 
 # ---------------------------------------------------------------------------
@@ -1353,11 +1300,6 @@ FROM z
 WHERE ABS(zscore) >= 2.0
 """
 
-SPARK_QUERIES["ts_audit"] = q_ts_audit
-ORACLE_SQL["ts_audit"] = SQL_TS_AUDIT
-
-
-
 
 # ---------------------------------------------------------------------------
 # Q: market-basket association rules (operators/aggregates.py) — the
@@ -1404,9 +1346,6 @@ ORDER BY lift DESC, item_a ASC, item_b ASC
 LIMIT 100
 """
 
-SPARK_QUERIES["assoc_rules"] = q_assoc_rules
-ORACLE_SQL["assoc_rules"] = SQL_ASSOC_RULES
-
 
 # ---------------------------------------------------------------------------
 # Q: time-weighted mean (TWAP) of the event value stream per user —
@@ -1449,5 +1388,293 @@ SELECT user_id, n_obs,
 FROM a WHERE total_dur_s > 0
 """
 
-SPARK_QUERIES["time_weighted_avg"] = q_time_weighted_avg
-ORACLE_SQL["time_weighted_avg"] = SQL_TIME_WEIGHTED_AVG
+
+# ---------------------------------------------------------------------------
+# geo_assign — ray-cast region assignment under the hard oracle.  The
+# fixture exercises the FULL RFC 7946 surface of
+# operators/geo.py::polygon_rings/point_in_rings —
+# north carries a HOLE (points inside it must stay unassigned) and the
+# new "isles" region is a two-part MultiPolygon — so the summed
+# multi-ring crossing parity sits under the driver hash, not just the
+# single-ring case.
+
+# ONE source of truth for the fixture ring sets, rendered into both
+# engines: region name → (geojson type, list of rings).
+GEO_RINGS: dict[str, tuple[str, list[list[tuple[float, float]]]]] = {
+    "north": (
+        "Polygon",
+        [
+            [(31.0, -16.0), (39.0, -16.0), (39.0, -12.5), (31.0, -12.5)],
+            # the hole: a lake in the middle of the north block
+            [(34.0, -15.0), (36.0, -15.0), (36.0, -13.5), (34.0, -13.5)],
+        ],
+    ),
+    "south_c": (
+        "Polygon",
+        [[
+            (30.5, -25.5), (38.0, -25.5), (38.0, -23.0), (33.0, -23.0),
+            (33.0, -20.0), (38.0, -20.0), (38.0, -18.0), (30.5, -18.0),
+        ]],
+    ),
+    "east_tri": (
+        "Polygon",
+        [[(38.5, -22.0), (39.9, -24.0), (39.9, -20.0)]],
+    ),
+    "isles": (
+        "MultiPolygon",
+        [
+            [(30.2, -17.4), (32.2, -17.4), (32.2, -16.4), (30.2, -16.4)],
+            [(38.6, -17.4), (39.8, -17.4), (39.8, -16.4), (38.6, -16.4)],
+        ],
+    ),
+}
+
+
+def q_geo_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .operators.geo import assign_regions
+    from .session import read_table
+
+    cust = read_table(spark, sf_dir, "customer")
+    points = cust.select(
+        F.col("c_custkey").alias("pid"),
+        # multiplicative spread so even a 150-row scale factor covers
+        # every fixture region (37, 53 coprime to the moduli)
+        (F.lit(30.0) + (F.col("c_custkey") * 37 % 1000) / 100.0).alias("lon"),
+        (F.lit(-26.0) + (F.col("c_custkey") * 53 % 700) / 50.0).alias("lat"),
+    )
+
+    def _close(ring):
+        return [[x, y] for x, y in ring] + [[ring[0][0], ring[0][1]]]
+
+    rows = []
+    for name, (gtype, rings) in GEO_RINGS.items():
+        if gtype == "Polygon":
+            coords = [_close(r) for r in rings]
+        else:  # MultiPolygon: each ring is its own single-ring part
+            coords = [[_close(r)] for r in rings]
+        rows.append((name, json.dumps({"type": gtype, "coordinates": coords})))
+    regions = spark.createDataFrame(
+        rows, "region string, geometry_json string"
+    )
+    out = assign_regions(points, regions)
+    return out.select("pid", "lon", "lat", F.col("region").cast(_S).alias("region"))
+
+
+def _sql_geo_assign() -> str:
+    region_rows = []
+    for name, (_gtype, rings) in GEO_RINGS.items():
+        rings_sql = (
+            "["
+            + ", ".join(
+                "["
+                + ", ".join(f"{{'x': {x!r}, 'y': {y!r}}}" for x, y in ring)
+                + "]"
+                for ring in rings
+            )
+            + "]::STRUCT(x DOUBLE, y DOUBLE)[][]"
+        )
+        xs = [x for ring in rings for x, _ in ring]
+        ys = [y for ring in rings for _, y in ring]
+        region_rows.append(
+            f"SELECT '{name}' AS region, {rings_sql} AS rs, "
+            f"{min(xs)!r} AS xmin, {max(xs)!r} AS xmax, "
+            f"{min(ys)!r} AS ymin, {max(ys)!r} AS ymax"
+        )
+    regions = " UNION ALL ".join(region_rows)
+    # summed crossing parity over EVERY ring of the region (holes and
+    # MultiPolygon parts alike) — exactly point_in_rings
+    cross_one = (
+        "list_reduce(list_transform(generate_series(1, len(rr)), i -> "
+        "CASE WHEN ((rr[i].y > p.lat) "
+        "!= (rr[CASE WHEN i = len(rr) THEN 1 ELSE i + 1 END].y > p.lat)) "
+        "AND (p.lon < "
+        "(rr[CASE WHEN i = len(rr) THEN 1 ELSE i + 1 END].x - rr[i].x) "
+        "* (p.lat - rr[i].y) "
+        "/ (rr[CASE WHEN i = len(rr) THEN 1 ELSE i + 1 END].y - rr[i].y) "
+        "+ rr[i].x) THEN 1 ELSE 0 END), (a, b) -> a + b)"
+    )
+    return f"""
+WITH points AS (
+  SELECT c_custkey AS pid,
+         30.0 + (c_custkey * 37 % 1000) / 100.0 AS lon,
+         -26.0 + (c_custkey * 53 % 700) / 50.0 AS lat
+  FROM customer
+),
+regions AS ({regions}),
+hits AS (
+  SELECT p.pid, r.region
+  FROM points p, regions r
+  WHERE p.lon >= r.xmin AND p.lon <= r.xmax
+    AND p.lat >= r.ymin AND p.lat <= r.ymax
+    AND list_reduce(
+          list_transform(r.rs, rr -> {cross_one}),
+          (a, b) -> a + b) % 2 = 1
+)
+SELECT p.pid, p.lon, p.lat, CAST(h.region AS VARCHAR) AS region
+FROM points p LEFT JOIN hits h ON p.pid = h.pid
+"""
+
+
+# ---------------------------------------------------------------------------
+# nearest_audit — the haversine + nearest-site argmin under the hard
+# oracle (the geo_assign discipline).  Points
+# synthesize deterministically from customer keys (the geo_assign
+# spread, so every SF covers the whole fixture box); six literal
+# landing sites are rendered from ONE python dict into BOTH engines.
+# The oracle replays haversine (radians/sin/cos/asin/sqrt — the same
+# libm-class chain as the registered ln rows; meters round to 3dp, and
+# tools/boundary_audit-style margins are pytest-pinned: argmin gaps and
+# range-gate margins sit >> any last-ulp drift) and the deterministic
+# (distance, site) tie order nearest_site uses.
+
+NEAREST_SITES: dict[str, tuple[float, float]] = {
+    "maputo": (32.57, -25.97),
+    "beira": (34.84, -19.84),
+    "quelimane": (36.89, -17.88),
+    "angoche": (39.91, -16.23),
+    "nacala": (40.67, -14.56),
+    "pemba": (40.52, -12.97),
+}
+
+_NEAREST_RANGE_M = 400_000.0
+
+
+def _nearest_points(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .session import read_table
+
+    cust = read_table(spark, sf_dir, "customer")
+    return cust.select(
+        F.col("c_custkey").alias("pid"),
+        (F.lit(30.0) + (F.col("c_custkey") * 37 % 1000) / 100.0).alias("lon"),
+        (F.lit(-26.0) + (F.col("c_custkey") * 53 % 700) / 50.0).alias("lat"),
+    )
+
+
+def q_nearest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .operators.geo import nearest_site
+
+    points = _nearest_points(spark, sf_dir)
+    sites = spark.createDataFrame(
+        [(name, lon, lat) for name, (lon, lat) in NEAREST_SITES.items()],
+        "site string, site_lon double, site_lat double",
+    )
+    out = nearest_site(
+        points,
+        sites,
+        id_col="pid",
+        max_distance_m=_NEAREST_RANGE_M,
+        keep_site_cols=["site"],
+    )
+    return out.select(
+        "pid", "lon", "lat",
+        F.col("site").cast("string").alias("site"),
+        F.col("site_distance_m").cast("double").alias("site_distance_m"),
+    )
+
+
+def _sql_nearest_audit() -> str:
+    site_rows = " UNION ALL ".join(
+        f"SELECT '{name}' AS site, {lon!r} AS slon, {lat!r} AS slat"
+        for name, (lon, lat) in NEAREST_SITES.items()
+    )
+    # exactly operators/geo.py::haversine_m: pow-squared half-angle
+    # sines, IUGG mean radius
+    d = (
+        "2 * 6371008.8 * asin(sqrt("
+        "pow(sin(radians(s.slat - p.lat) / 2), 2)"
+        " + cos(radians(p.lat)) * cos(radians(s.slat))"
+        " * pow(sin(radians(s.slon - p.lon) / 2), 2)))"
+    )
+    return f"""
+WITH points AS (
+  SELECT c_custkey AS pid,
+         30.0 + (c_custkey * 37 % 1000) / 100.0 AS lon,
+         -26.0 + (c_custkey * 53 % 700) / 50.0 AS lat
+  FROM customer
+),
+sites AS ({site_rows}),
+cand AS (
+  SELECT p.pid, s.site, {d} AS dm
+  FROM points p CROSS JOIN sites s
+),
+pick AS (
+  SELECT pid, site, dm,
+         ROW_NUMBER() OVER (PARTITION BY pid ORDER BY dm, site) AS rn
+  FROM cand WHERE dm <= {_NEAREST_RANGE_M!r}
+)
+SELECT p.pid, p.lon, p.lat, CAST(k.site AS VARCHAR) AS site,
+       CAST(round(k.dm, 3) AS DOUBLE) AS site_distance_m
+FROM points p LEFT JOIN (SELECT * FROM pick WHERE rn = 1) k
+  ON p.pid = k.pid
+"""
+
+
+# ---------------------------------------------------------------------------
+# exports
+
+QUERIES = {
+    "nested_series": q_nested_series,
+    "interval_join": q_interval_join,
+    "conversion_funnel": q_conversion_funnel,
+    "retention_cohorts": q_retention_cohorts,
+    "rank_inference": q_rank_inference,
+    "string_ops": q_string_ops,
+    "iso_format": q_iso_format,
+    "except_keys": q_except_keys,
+    "uniqueness_check": q_uniqueness_check,
+    "rank_lookup": q_rank_lookup,
+    "pct_of_group": q_pct_of_group,
+    "sessionization": q_sessionization,
+    "rollup_summary": q_rollup_summary,
+    "asof_join": q_asof_join,
+    "running_total": q_running_total,
+    "geo_rollup_join": q_geo_rollup_join,
+    "site_stats_full": q_site_stats_full,
+    "pii_scrub": q_pii_scrub,
+    "merge_upsert": q_merge_upsert,
+    "scd2_versions": q_scd2_versions,
+    "pagerank": q_pagerank,
+    "trailing_window": q_trailing_window,
+    "triangle_count": q_triangle_count,
+    "ts_audit": q_ts_audit,
+    "assoc_rules": q_assoc_rules,
+    "time_weighted_avg": q_time_weighted_avg,
+    "geo_assign": q_geo_assign,
+    "nearest_audit": q_nearest_audit,
+}
+
+
+def oracle_sql() -> dict[str, str]:
+    return {
+        "nested_series": SQL_NESTED_SERIES,
+        "interval_join": SQL_INTERVAL_JOIN,
+        "conversion_funnel": SQL_CONVERSION_FUNNEL,
+        "retention_cohorts": SQL_RETENTION_COHORTS,
+        "rank_inference": SQL_RANK_INFERENCE,
+        "string_ops": SQL_STRING_OPS,
+        "iso_format": SQL_ISO_FORMAT,
+        "except_keys": SQL_EXCEPT_KEYS,
+        "uniqueness_check": SQL_UNIQUENESS_CHECK,
+        "rank_lookup": SQL_RANK_LOOKUP,
+        "pct_of_group": SQL_PCT_OF_GROUP,
+        "sessionization": SQL_SESSIONIZATION,
+        "rollup_summary": SQL_ROLLUP_SUMMARY,
+        "asof_join": SQL_ASOF_JOIN,
+        "running_total": SQL_RUNNING_TOTAL,
+        "geo_rollup_join": SQL_GEO_ROLLUP_JOIN,
+        "site_stats_full": SQL_SITE_STATS_FULL,
+        "pii_scrub": SQL_PII_SCRUB,
+        "merge_upsert": SQL_MERGE_UPSERT,
+        "scd2_versions": SQL_SCD2_VERSIONS,
+        "pagerank": SQL_PAGERANK,
+        "trailing_window": SQL_TRAILING_WINDOW,
+        "triangle_count": SQL_TRIANGLE_COUNT,
+        "ts_audit": SQL_TS_AUDIT,
+        "assoc_rules": SQL_ASSOC_RULES,
+        "time_weighted_avg": SQL_TIME_WEIGHTED_AVG,
+        "geo_assign": _sql_geo_assign(),
+        "nearest_audit": _sql_nearest_audit(),
+    }
+
+
+UNIONS: dict[str, tuple[str, str]] = {}

@@ -1,6 +1,9 @@
-"""Query registry batch 2: N-ary merges, conditional 1:1 join, flag
-battery + explode, fuzzy dedup, quantile coefficients, LW model math,
-events windowing.  Same cross-engine determinism rules as registry.py.
+"""Relational registry rows over the TPC-H-shaped harness tables: trip
+rollups, star-join enrichment, densified monthly medians, top-k with an
+Other bucket, robust MAD bounds, reshapes, semi/anti joins, the
+pricing summary, N-ary merges, the conditional 1:1 join, the flag
+battery, fuzzy dedup, quantile coefficients, LW model math and events
+windowing.  Same cross-engine determinism rules as registry.py.
 """
 
 from __future__ import annotations
@@ -9,8 +12,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.columns import flag_concat
+from .operators import aggregates as agg_ops
 from .operators import joins as join_ops
 from .operators import reshape as reshape_ops
+from .operators import windows as win_ops
 from .operators.aggregates import distinct_last_wins
 from .session import read_table
 
@@ -18,6 +23,30 @@ from .session import read_table
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_table(spark, sf_dir, name)
+
+
+def cents(col: str | F.Column) -> F.Column:
+    """2-decimal money column → exact integer cents.
+
+    Integer-cents aggregation is ~4× faster than decimal128 sums and
+    produces bit-identical doubles after the final division (both
+    engines round-to-nearest the same exact rational).  The inputs are
+    2-decimal values, so round(x*100) recovers the integer exactly —
+    x*100 lands within 1 ulp of it, never at a .5 boundary.  Row
+    magnitudes: price ≤ ~1e5 → cents ≤ 1e7; long sums stay exact far
+    beyond harness scale (overflow would need ~1e11 rows of max price).
+    """
+    c = F.col(col) if isinstance(col, str) else col
+    return F.round(c * 100).cast("long")
+
+
+def _revenue_cents() -> F.Column:
+    """Revenue in cents·100 units (scale 4): price_c × (100 − disc_c)."""
+    return cents("l_extendedprice") * (F.lit(100) - cents("l_discount"))
+
+
+def _r6(c):
+    return F.round(c, 6)
 
 
 # ---------------------------------------------------------------------------
@@ -624,7 +653,473 @@ FROM events GROUP BY event_type
 """
 
 
-SPARK_QUERIES = {
+# ---------------------------------------------------------------------------
+# Q: trip rollup (A1/A2 + M4 indicators) — survey trip totals analog:
+# lineitem grouped by order with carry-along order attributes, then
+# CPUE-style per-unit indicator.  R/preprocessing-surveys.R:773-786,
+# R/validation.R:332-359, R/export.R:88-116.
+
+
+def q_trip_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    lineitem = _t(spark, sf_dir, "lineitem")
+    orders = _t(spark, sf_dir, "orders")
+    per_trip = lineitem.groupBy("l_orderkey").agg(
+        F.sum(cents("l_quantity")).alias("qty_c"),
+        F.sum(_revenue_cents()).alias("rev_c"),
+        F.count(F.lit(1)).alias("n_items"),
+    )
+    carry = orders.select(
+        F.col("o_orderkey").alias("l_orderkey"),
+        F.col("o_orderdate").cast("date").alias("order_date"),
+        "o_orderpriority",
+    )
+    out = per_trip.join(carry, "l_orderkey", "left")
+    # price-per-unit indicator (M4 price/kg analog); Inf normalized to NULL.
+    # Quantized to micro-units in pure BIGINT arithmetic (half-up via
+    # integer division) so Spark and any ANSI-SQL engine produce the exact
+    # same double: ratio = (rev_c/1e4)/(qty_c/1e2) = rev_c/(100*qty_c);
+    # micro = floor(ratio*1e6 + 0.5) = (2e6*rev_c + 100*qty_c) div (200*qty_c).
+    ppu_micro = F.expr(
+        "CASE WHEN qty_c > 0 THEN (rev_c * 2000000 + qty_c * 100) div (qty_c * 200) END"
+    )
+    return out.select(
+        "l_orderkey",
+        (F.col("qty_c") / 100.0).alias("total_qty"),
+        (F.col("rev_c") / 10000.0).alias("revenue"),
+        "n_items",
+        "order_date",
+        "o_orderpriority",
+        (ppu_micro / 1000000.0).alias("price_per_unit"),
+    )
+
+
+SQL_TRIP_ROLLUP = """
+WITH per_trip AS (
+  SELECT
+    l_orderkey,
+    SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS qty_c,
+    SUM(CAST(round(l_extendedprice * 100) AS BIGINT)
+        * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS rev_c,
+    COUNT(*) AS n_items
+  FROM lineitem GROUP BY l_orderkey
+)
+SELECT
+  p.l_orderkey,
+  p.qty_c / 100.0 AS total_qty,
+  p.rev_c / 10000.0 AS revenue,
+  p.n_items,
+  CAST(o.o_orderdate AS DATE) AS order_date,
+  o.o_orderpriority,
+  (CASE WHEN p.qty_c > 0
+        THEN (p.rev_c * 2000000 + p.qty_c * 100) // (p.qty_c * 200)
+   END) / 1000000.0 AS price_per_unit
+FROM per_trip p LEFT JOIN orders o ON p.l_orderkey = o.o_orderkey
+"""
+
+
+# ---------------------------------------------------------------------------
+# Q: dimension enrichment chain (J1) — star joins lineitem→supplier→
+# nation→region then aggregate.  R/preprocessing-surveys.R:974-1016.
+
+
+def q_dim_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    lineitem = _t(spark, sf_dir, "lineitem")
+    supplier = _t(spark, sf_dir, "supplier")
+    nation = _t(spark, sf_dir, "nation")
+    region = _t(spark, sf_dir, "region")
+    enriched = join_ops.enrich(
+        lineitem.withColumn("rev_c", _revenue_cents()),
+        [
+            (supplier.select(F.col("s_suppkey").alias("l_suppkey"), "s_nationkey"), "l_suppkey"),
+            (nation.select(F.col("n_nationkey").alias("s_nationkey"), "n_name", "n_regionkey"), "s_nationkey"),
+            (region.select(F.col("r_regionkey").alias("n_regionkey"), "r_name"), "n_regionkey"),
+        ],
+    )
+    return (
+        enriched.groupBy("r_name", "l_returnflag")
+        .agg(
+            (F.sum("rev_c") / 10000.0).alias("revenue"),
+            F.count(F.lit(1)).alias("n_rows"),
+        )
+        .select("r_name", "l_returnflag", "revenue", "n_rows")
+    )
+
+
+SQL_DIM_ENRICHMENT = """
+SELECT
+  r.r_name, l.l_returnflag,
+  SUM(CAST(round(l.l_extendedprice * 100) AS BIGINT)
+      * (100 - CAST(round(l.l_discount * 100) AS BIGINT))) / 10000.0 AS revenue,
+  COUNT(*) AS n_rows
+FROM lineitem l
+LEFT JOIN supplier s ON l.l_suppkey = s.s_suppkey
+LEFT JOIN nation n ON s.s_nationkey = n.n_nationkey
+LEFT JOIN region r ON n.n_regionkey = r.r_regionkey
+GROUP BY r.r_name, l.l_returnflag
+"""
+
+
+# ---------------------------------------------------------------------------
+# Q: monthly median with calendar densification (A3 + D2 + R7) — the
+# flagship "monthly median CPUE by district" shape (R/export.R:568-602):
+# month-truncate, exact median per (nation, month), then complete the
+# month spine emitting NULL rows for missing months.
+
+
+def q_monthly_median(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = _t(spark, sf_dir, "orders")
+    customer = _t(spark, sf_dir, "customer")
+    nation = _t(spark, sf_dir, "nation")
+    facts = (
+        orders.join(
+            F.broadcast(customer.select(F.col("c_custkey").alias("o_custkey"), "c_nationkey")),
+            "o_custkey",
+        )
+        .join(
+            F.broadcast(nation.select(F.col("n_nationkey").alias("c_nationkey"), "n_name")),
+            "c_nationkey",
+        )
+        .select(
+            "n_name",
+            F.date_trunc("month", F.col("o_orderdate")).cast("date").alias("month"),
+            "o_totalprice",
+        )
+    )
+    monthly = facts.groupBy("n_name", "month").agg(
+        _r6(F.percentile(F.col("o_totalprice"), F.lit(0.5))).alias("median_price"),
+        F.count(F.lit(1)).alias("n_orders"),
+    )
+    dense = reshape_ops.complete_months(
+        monthly, ["n_name"], "month", fill={"n_orders": F.lit(0)}
+    )
+    return dense.select("n_name", "month", "median_price", "n_orders")
+
+
+SQL_MONTHLY_MEDIAN = """
+WITH facts AS (
+  SELECT n.n_name,
+         CAST(date_trunc('month', o.o_orderdate) AS DATE) AS month,
+         o.o_totalprice
+  FROM orders o
+  JOIN customer c ON o.o_custkey = c.c_custkey
+  JOIN nation n ON c.c_nationkey = n.n_nationkey
+),
+monthly AS (
+  SELECT n_name, month,
+         ROUND(quantile_cont(o_totalprice, 0.5), 6) AS median_price,
+         COUNT(*) AS n_orders
+  FROM facts GROUP BY n_name, month
+),
+spine AS (
+  SELECT CAST(unnest(generate_series(
+           (SELECT MIN(month) FROM monthly),
+           (SELECT MAX(month) FROM monthly),
+           INTERVAL 1 MONTH)) AS DATE) AS month
+),
+dims AS (SELECT DISTINCT n_name FROM monthly)
+SELECT d.n_name, s.month, m.median_price,
+       COALESCE(m.n_orders, 0) AS n_orders
+FROM dims d CROSS JOIN spine s
+LEFT JOIN monthly m ON m.n_name = d.n_name AND m.month = s.month
+"""
+
+
+# ---------------------------------------------------------------------------
+# Q: top-k with Other rollup (W1/W2) — top-3 brands per supplier nation
+# by revenue, remainder bucketed as 'Other' and re-aggregated
+# (R/export.R:636-693).
+
+
+def q_topk_other(spark: SparkSession, sf_dir: str) -> DataFrame:
+    lineitem = _t(spark, sf_dir, "lineitem")
+    part = _t(spark, sf_dir, "part")
+    supplier = _t(spark, sf_dir, "supplier")
+    nation = _t(spark, sf_dir, "nation")
+    enriched = join_ops.enrich(
+        lineitem.withColumn("rev_c", _revenue_cents()),
+        [
+            (part.select(F.col("p_partkey").alias("l_partkey"), "p_brand"), "l_partkey"),
+            (supplier.select(F.col("s_suppkey").alias("l_suppkey"), "s_nationkey"), "l_suppkey"),
+            (nation.select(F.col("n_nationkey").alias("s_nationkey"), "n_name"), "s_nationkey"),
+        ],
+    )
+    per_brand = enriched.groupBy("n_name", "p_brand").agg(
+        F.sum("rev_c").alias("rev_c")
+    )
+    # ranking on the exact integer total — no float ties possible
+    ranked = win_ops.rank_in_group(per_brand, ["n_name"], "rev_c", True, "_rk", ["p_brand"])
+    bucketed = ranked.withColumn(
+        "brand",
+        F.when(F.col("_rk") <= 3, F.col("p_brand")).otherwise(F.lit("Other")),
+    )
+    return (
+        bucketed.groupBy("n_name", "brand")
+        .agg((F.sum("rev_c") / 10000.0).alias("revenue"))
+        .select("n_name", "brand", "revenue")
+    )
+
+
+SQL_TOPK_OTHER = """
+WITH per_brand AS (
+  SELECT n.n_name, p.p_brand,
+         SUM(CAST(round(l.l_extendedprice * 100) AS BIGINT)
+             * (100 - CAST(round(l.l_discount * 100) AS BIGINT))) AS rev_c
+  FROM lineitem l
+  JOIN part p ON l.l_partkey = p.p_partkey
+  JOIN supplier s ON l.l_suppkey = s.s_suppkey
+  JOIN nation n ON s.s_nationkey = n.n_nationkey
+  GROUP BY n.n_name, p.p_brand
+),
+ranked AS (
+  SELECT *, ROW_NUMBER() OVER (PARTITION BY n_name ORDER BY rev_c DESC, p_brand) AS rk
+  FROM per_brand
+)
+SELECT n_name,
+       CASE WHEN rk <= 3 THEN p_brand ELSE 'Other' END AS brand,
+       SUM(rev_c) / 10000.0 AS revenue
+FROM ranked
+GROUP BY n_name, CASE WHEN rk <= 3 THEN p_brand ELSE 'Other' END
+"""
+
+
+# ---------------------------------------------------------------------------
+# Q: robust MAD outlier bounds (A7) — per-brand log-scale median±k·MAD
+# bounds on extended price, the reference's main custom aggregate
+# (R/validation-functions.R:43-69,108-132).
+
+
+def q_robust_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
+    lineitem = _t(spark, sf_dir, "lineitem")
+    part = _t(spark, sf_dir, "part")
+    joined = lineitem.join(
+        F.broadcast(part.select(F.col("p_partkey").alias("l_partkey"), "p_brand")),
+        "l_partkey",
+    )
+    bounds = agg_ops.robust_bounds(joined, ["p_brand"], "l_extendedprice", k=3.0)
+    return bounds.select(
+        "p_brand",
+        _r6(F.col("lower_bound")).alias("lower_bound"),
+        _r6(F.col("upper_bound")).alias("upper_bound"),
+    )
+
+
+SQL_ROBUST_BOUNDS = """
+WITH x AS (
+  SELECT p.p_brand, ln(l.l_extendedprice) AS lx
+  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+  WHERE l.l_extendedprice > 0
+),
+med AS (
+  SELECT p_brand, quantile_cont(lx, 0.5) AS med FROM x GROUP BY p_brand
+),
+stats AS (
+  SELECT x.p_brand,
+         ANY_VALUE(m.med) AS med,
+         quantile_cont(ABS(x.lx - m.med), 0.5) AS mad
+  FROM x JOIN med m ON x.p_brand = m.p_brand
+  GROUP BY x.p_brand
+)
+SELECT p_brand,
+       ROUND(CASE WHEN mad > 0 THEN exp(med - 3.0 * 1.4826 * mad) END, 6) AS lower_bound,
+       ROUND(CASE WHEN mad > 0 THEN exp(med + 3.0 * 1.4826 * mad) END, 6) AS upper_bound
+FROM stats
+"""
+
+
+# ---------------------------------------------------------------------------
+# Q: unpivot to long metrics (R8) — quantity/price/discount stacked into
+# (metric_type, metric_value) per order-line, then aggregated monthly:
+# the reference's long "fishery metrics" normalization
+# (R/preprocessing-surveys.R:795-804, R/export.R:201-205).
+
+
+def q_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
+    lineitem = _t(spark, sf_dir, "lineitem")
+    prepared = lineitem.select(
+        F.date_trunc("month", F.col("l_shipdate")).cast("date").alias("month"),
+        cents("l_quantity").alias("quantity"),
+        cents("l_extendedprice").alias("price"),
+        cents("l_discount").alias("discount"),
+    )
+    long = reshape_ops.unpivot(
+        prepared, ["month"], ["quantity", "price", "discount"],
+        "metric_type", "metric_value",
+    )
+    return (
+        long.groupBy("month", "metric_type")
+        .agg(
+            (F.sum("metric_value") / 100.0).alias("metric_total"),
+            F.count(F.lit(1)).alias("n_values"),
+        )
+        .select("month", "metric_type", "metric_total", "n_values")
+    )
+
+
+SQL_UNPIVOT_METRICS = """
+WITH long AS (
+  SELECT CAST(date_trunc('month', l_shipdate) AS DATE) AS month,
+         metric_type, metric_value
+  FROM (
+    SELECT l_shipdate,
+           CAST(round(l_quantity * 100) AS BIGINT) AS quantity,
+           CAST(round(l_extendedprice * 100) AS BIGINT) AS price,
+           CAST(round(l_discount * 100) AS BIGINT) AS discount
+    FROM lineitem
+  ) UNPIVOT (metric_value FOR metric_type IN (quantity, price, discount))
+)
+SELECT month, metric_type,
+       SUM(metric_value) / 100.0 AS metric_total,
+       COUNT(*) AS n_values
+FROM long GROUP BY month, metric_type
+"""
+
+
+# ---------------------------------------------------------------------------
+# Q: long→wide pivot (R2) — order counts per nation pivoted by order
+# status (R/export.R:373-381 pivot_wider).
+
+
+def q_pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = _t(spark, sf_dir, "orders")
+    customer = _t(spark, sf_dir, "customer")
+    nation = _t(spark, sf_dir, "nation")
+    joined = orders.join(
+        F.broadcast(customer.select(F.col("c_custkey").alias("o_custkey"), "c_nationkey")),
+        "o_custkey",
+    ).join(
+        F.broadcast(nation.select(F.col("n_nationkey").alias("c_nationkey"), "n_name")),
+        "c_nationkey",
+    )
+    statuses = ["F", "O", "P"]
+    pivoted = (
+        joined.groupBy("n_name")
+        .pivot("o_orderstatus", statuses)
+        .agg(F.count(F.lit(1)))
+    )
+    out = pivoted
+    for s in statuses:
+        out = out.withColumn(s, F.coalesce(F.col(s), F.lit(0)).cast("long"))
+    return out.select("n_name", *[F.col(s).alias(f"status_{s}") for s in statuses])
+
+
+SQL_PIVOT_STATUS = """
+SELECT n.n_name,
+       CAST(COUNT(*) FILTER (WHERE o.o_orderstatus = 'F') AS BIGINT) AS status_F,
+       CAST(COUNT(*) FILTER (WHERE o.o_orderstatus = 'O') AS BIGINT) AS status_O,
+       CAST(COUNT(*) FILTER (WHERE o.o_orderstatus = 'P') AS BIGINT) AS status_P
+FROM orders o
+JOIN customer c ON o.o_custkey = c.c_custkey
+JOIN nation n ON c.c_nationkey = n.n_nationkey
+GROUP BY n.n_name
+"""
+
+
+# ---------------------------------------------------------------------------
+# Q: semi/anti join (J6/J7) — customers partitioned into with/without
+# recent orders (validation's flagged-id exclusion shape,
+# R/validation.R:315-317,432-440).
+
+
+def q_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
+    customer = _t(spark, sf_dir, "customer")
+    orders = _t(spark, sf_dir, "orders")
+    recent = orders.filter(F.col("o_orderdate") >= F.lit("1999-01-01")).select(
+        F.col("o_custkey").alias("c_custkey")
+    )
+    with_recent = join_ops.semi_join(customer, recent, "c_custkey").select(
+        "c_custkey", "c_mktsegment", F.lit("active").alias("cohort")
+    )
+    without = join_ops.anti_join(customer, recent, "c_custkey").select(
+        "c_custkey", "c_mktsegment", F.lit("inactive").alias("cohort")
+    )
+    both = with_recent.unionByName(without)
+    return (
+        both.groupBy("c_mktsegment", "cohort")
+        .agg(F.count(F.lit(1)).alias("n_customers"))
+        .select("c_mktsegment", "cohort", "n_customers")
+    )
+
+
+SQL_SEMI_ANTI = """
+WITH recent AS (
+  SELECT DISTINCT o_custkey FROM orders WHERE o_orderdate >= TIMESTAMP '1999-01-01'
+),
+cohorts AS (
+  SELECT c_custkey, c_mktsegment,
+         CASE WHEN c_custkey IN (SELECT o_custkey FROM recent)
+              THEN 'active' ELSE 'inactive' END AS cohort
+  FROM customer
+)
+SELECT c_mktsegment, cohort, COUNT(*) AS n_customers
+FROM cohorts GROUP BY c_mktsegment, cohort
+"""
+
+
+# ---------------------------------------------------------------------------
+# Q: TPC-H Q1 shape — the canonical pricing-summary report (grouped
+# multi-aggregate with filters), exact decimal arithmetic throughout.
+
+
+def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    lineitem = _t(spark, sf_dir, "lineitem")
+    # integer units: cents for linear terms, cents·100 for disc_price,
+    # cents·10000 for charge — all exact in BIGINT at harness scale
+    charge_c = cents("l_extendedprice") * (F.lit(100) - cents("l_discount")) * (
+        F.lit(100) + cents("l_tax")
+    )
+    filtered = lineitem.filter(F.col("l_shipdate") <= F.lit("2001-06-01"))
+    return (
+        filtered.groupBy("l_returnflag", "l_linestatus")
+        .agg(
+            (F.sum(cents("l_quantity")) / 100.0).alias("sum_qty"),
+            (F.sum(cents("l_extendedprice")) / 100.0).alias("sum_base_price"),
+            (F.sum(_revenue_cents()) / 10000.0).alias("sum_disc_price"),
+            (F.sum(charge_c) / 1000000.0).alias("sum_charge"),
+            (F.sum(cents("l_quantity")) / 100.0 / F.count(F.lit(1))).alias("avg_qty"),
+            (F.sum(cents("l_extendedprice")) / 100.0 / F.count(F.lit(1))).alias("avg_price"),
+            F.count(F.lit(1)).alias("count_order"),
+        )
+        .select(
+            "l_returnflag", "l_linestatus", "sum_qty", "sum_base_price",
+            "sum_disc_price", "sum_charge",
+            _r6(F.col("avg_qty")).alias("avg_qty"),
+            _r6(F.col("avg_price")).alias("avg_price"),
+            "count_order",
+        )
+    )
+
+
+SQL_PRICING_SUMMARY = """
+SELECT l_returnflag, l_linestatus,
+       SUM(CAST(round(l_quantity * 100) AS BIGINT)) / 100.0 AS sum_qty,
+       SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) / 100.0 AS sum_base_price,
+       SUM(CAST(round(l_extendedprice * 100) AS BIGINT)
+           * (100 - CAST(round(l_discount * 100) AS BIGINT))) / 10000.0 AS sum_disc_price,
+       SUM(CAST(round(l_extendedprice * 100) AS BIGINT)
+           * (100 - CAST(round(l_discount * 100) AS BIGINT))
+           * (100 + CAST(round(l_tax * 100) AS BIGINT))) / 1000000.0 AS sum_charge,
+       ROUND(SUM(CAST(round(l_quantity * 100) AS BIGINT)) / 100.0 / COUNT(*), 6) AS avg_qty,
+       ROUND(SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) / 100.0 / COUNT(*), 6) AS avg_price,
+       COUNT(*) AS count_order
+FROM lineitem
+WHERE l_shipdate <= TIMESTAMP '2001-06-01'
+GROUP BY l_returnflag, l_linestatus
+"""
+
+
+# ---------------------------------------------------------------------------
+# exports
+
+QUERIES = {
+    "trip_rollup": q_trip_rollup,
+    "dim_enrichment": q_dim_enrichment,
+    "monthly_median": q_monthly_median,
+    "topk_other": q_topk_other,
+    "robust_bounds": q_robust_bounds,
+    "unpivot_metrics": q_unpivot_metrics,
+    "pivot_status": q_pivot_status,
+    "semi_anti": q_semi_anti,
+    "pricing_summary": q_pricing_summary,
     "nary_full_join": q_nary_full_join,
     "conditional_merge": q_conditional_merge,
     "flag_battery": q_flag_battery,
@@ -638,16 +1133,30 @@ SPARK_QUERIES = {
     "json_extract": q_json_extract,
 }
 
-ORACLE_SQL = {
-    "nary_full_join": SQL_NARY_FULL_JOIN,
-    "conditional_merge": SQL_CONDITIONAL_MERGE,
-    "flag_battery": SQL_FLAG_BATTERY,
-    "flag_battery_full": SQL_FLAG_BATTERY_FULL,
-    "fuzzy_dedup": SQL_FUZZY_DEDUP,
-    "quantile_coeffs": SQL_QUANTILE_COEFFS,
-    "lw_model": SQL_LW_MODEL,
-    "last_wins": SQL_LAST_WINS,
-    "events_hourly": SQL_EVENTS_HOURLY,
-    "user_activity": SQL_USER_ACTIVITY,
-    "json_extract": SQL_JSON_EXTRACT,
-}
+
+def oracle_sql() -> dict[str, str]:
+    return {
+        "trip_rollup": SQL_TRIP_ROLLUP,
+        "dim_enrichment": SQL_DIM_ENRICHMENT,
+        "monthly_median": SQL_MONTHLY_MEDIAN,
+        "topk_other": SQL_TOPK_OTHER,
+        "robust_bounds": SQL_ROBUST_BOUNDS,
+        "unpivot_metrics": SQL_UNPIVOT_METRICS,
+        "pivot_status": SQL_PIVOT_STATUS,
+        "semi_anti": SQL_SEMI_ANTI,
+        "pricing_summary": SQL_PRICING_SUMMARY,
+        "nary_full_join": SQL_NARY_FULL_JOIN,
+        "conditional_merge": SQL_CONDITIONAL_MERGE,
+        "flag_battery": SQL_FLAG_BATTERY,
+        "flag_battery_full": SQL_FLAG_BATTERY_FULL,
+        "fuzzy_dedup": SQL_FUZZY_DEDUP,
+        "quantile_coeffs": SQL_QUANTILE_COEFFS,
+        "lw_model": SQL_LW_MODEL,
+        "last_wins": SQL_LAST_WINS,
+        "events_hourly": SQL_EVENTS_HOURLY,
+        "user_activity": SQL_USER_ACTIVITY,
+        "json_extract": SQL_JSON_EXTRACT,
+    }
+
+
+UNIONS: dict[str, tuple[str, str]] = {}

@@ -1,6 +1,9 @@
-"""Query registry batch 3: training-data pipeline operators over the
-``documents`` and ``embeddings`` tables — text quality, language ID,
-exact/MinHash/SimHash dedup, n-gram Jaccard, fingerprinting, ANN.
+"""Text, dedup and similarity registry rows over the ``documents`` and
+``embeddings`` tables: text quality, language ID and segmentation,
+exact/MinHash/SimHash dedup, n-gram Jaccard, fingerprinting, BM25 and
+hybrid retrieval, ANN tiers, embedding drift and covariance, the
+hashed linear classifier, cross-corpus near-dup probing and
+contamination scoring.
 
 Oracle portability notes: all hashing is md5 (hex string) so DuckDB
 reproduces signatures exactly; all float folds are sequential
@@ -10,13 +13,22 @@ ratios are rounded to 6 decimals on both sides.
 
 from __future__ import annotations
 
+import hashlib
+import math
+import re
+from collections import Counter
+from functools import lru_cache
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators import dedup as dedup_ops
 from .operators import similarity as sim_ops
 from .operators import text as text_ops
+from .operators.dedup import MINHASH_A, MINHASH_B, MINHASH_P
 from .session import read_table
+
+_L = "long"
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1197,14 +1209,9 @@ WHERE d.doc_id NOT IN (SELECT n FROM losers)
 
 
 # ---------------------------------------------------------------------------
-# Q: adjacent-bigram PMI — collocation mining (phrase-vocab induction
-# signal).  Counts exact; one ln rounded to 6 on both engines.
-
-
-def q_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text_ops.bigram_pmi(_docs(spark, sf_dir), min_count=5)
-
-
+# Adjacent-bigram PMI — collocation mining (phrase-vocab induction
+# signal), one leg of term_stats.  Counts exact; one ln rounded to 6 on
+# both engines.
 SQL_BIGRAM_PMI = """
 WITH toks AS (
   SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents
@@ -1235,15 +1242,6 @@ JOIN uni_counts ua ON c.w1 = ua.token
 JOIN uni_counts ub ON c.w2 = ub.token, tot, totb
 WHERE c.n_ab >= 5
 """
-
-
-# ---------------------------------------------------------------------------
-# Q: per-doc top-k tf·idf terms — keyword extraction (Salton idf, no
-# smoothing; ties break on the term string for cross-engine ranks).
-
-
-def q_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text_ops.tfidf_top_terms(_docs(spark, sf_dir), k=3)
 
 
 # ---------------------------------------------------------------------------
@@ -1287,6 +1285,9 @@ def q_term_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pmi.unionByName(tfidf)
 
 
+# Per-doc top-k tf·idf terms — keyword extraction (Salton idf, no
+# smoothing; ties break on the term string for cross-engine ranks), the
+# other leg of term_stats.
 SQL_TFIDF_TERMS = """
 WITH tok AS (
   SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS term
@@ -1352,117 +1353,10 @@ SELECT id_a, id_b, jaccard FROM (
 
 
 # ---------------------------------------------------------------------------
-# Q: duplicated-substring spans — merged runs of corpus-duplicated
-# n-grams (the distributed stand-in for suffix-array exact-substring
-# dedup, Lee et al. 2022).  Pure integer arithmetic on both engines.
+# n-gram length of the duplicated-substring spans (the distributed
+# stand-in for suffix-array exact-substring dedup, Lee et al. 2022).
 
 _SPAN_N = 8
-
-
-def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup_ops.duplicated_ngram_spans(_docs(spark, sf_dir), n=_SPAN_N)
-
-
-SQL_DUP_SPANS = f"""
-WITH toks AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents
-),
-grams AS (
-  SELECT doc_id, i AS pos,
-         ('0x' || substr(md5(array_to_string(t[i:i+{_SPAN_N - 1}], ' ')), 1, 8))::BIGINT AS gh
-  FROM toks, UNNEST(generate_series(1, len(t) - {_SPAN_N - 1})) AS g(i)
-  WHERE len(t) >= {_SPAN_N}
-),
-dup AS (
-  SELECT gh FROM grams GROUP BY gh HAVING COUNT(*) >= 2
-),
-hits AS (
-  SELECT doc_id, pos FROM grams WHERE gh IN (SELECT gh FROM dup)
-),
-isl AS (
-  SELECT doc_id, pos,
-         CASE WHEN lag(pos) OVER w IS NULL OR pos - lag(pos) OVER w > 1
-              THEN 1 ELSE 0 END AS newf
-  FROM hits WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-),
-isl2 AS (
-  SELECT doc_id, pos,
-         SUM(newf) OVER (PARTITION BY doc_id ORDER BY pos) AS island
-  FROM isl
-)
-SELECT doc_id,
-       MIN(pos) AS span_start,
-       MAX(pos) + {_SPAN_N - 1} AS span_end,
-       MAX(pos) + {_SPAN_N - 1} - MIN(pos) + 1 AS span_tokens
-FROM isl2 GROUP BY doc_id, island
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q: span scrub — remove every duplicated span's tokens (symmetric
-# exact-substring removal; pure integer span arithmetic + string
-# rebuild on both engines).
-
-
-def q_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    spans = dedup_ops.duplicated_ngram_spans(docs, n=_SPAN_N)
-    return text_ops.remove_spans(docs, spans)
-
-
-SQL_SPAN_SCRUB = f"""
-WITH toks AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents
-),
-grams AS (
-  SELECT doc_id, i AS pos,
-         ('0x' || substr(md5(array_to_string(t[i:i+{_SPAN_N - 1}], ' ')), 1, 8))::BIGINT AS gh
-  FROM toks, UNNEST(generate_series(1, len(t) - {_SPAN_N - 1})) AS g(i)
-  WHERE len(t) >= {_SPAN_N}
-),
-dup AS (
-  SELECT gh FROM grams GROUP BY gh HAVING COUNT(*) >= 2
-),
-hits AS (
-  SELECT doc_id, pos FROM grams WHERE gh IN (SELECT gh FROM dup)
-),
-isl AS (
-  SELECT doc_id, pos,
-         CASE WHEN lag(pos) OVER w IS NULL OR pos - lag(pos) OVER w > 1
-              THEN 1 ELSE 0 END AS newf
-  FROM hits WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-),
-isl2 AS (
-  SELECT doc_id, pos,
-         SUM(newf) OVER (PARTITION BY doc_id ORDER BY pos) AS island
-  FROM isl
-),
-spans AS (
-  SELECT doc_id, MIN(pos) AS span_start, MAX(pos) + {_SPAN_N - 1} AS span_end
-  FROM isl2 GROUP BY doc_id, island
-),
-tokpos AS (
-  SELECT doc_id, t[i] AS token, i AS pos, len(t) AS n_tok
-  FROM toks, UNNEST(generate_series(1, len(t))) AS g(i)
-),
-kept AS (
-  SELECT tp.doc_id, tp.token, tp.pos, tp.n_tok
-  FROM tokpos tp
-  WHERE NOT EXISTS (
-    SELECT 1 FROM spans s
-    WHERE s.doc_id = tp.doc_id AND tp.pos BETWEEN s.span_start AND s.span_end
-  )
-),
-rebuilt AS (
-  SELECT doc_id, string_agg(token, ' ' ORDER BY pos) AS text_clean,
-         MAX(n_tok) - COUNT(*) AS n_removed
-  FROM kept GROUP BY doc_id
-)
-SELECT d.doc_id,
-       COALESCE(r.text_clean, '') AS text_clean,
-       COALESCE(r.n_removed, len(string_split_regex(trim(d.text), '\\s+'))) AS n_removed
-FROM documents d LEFT JOIN rebuilt r ON d.doc_id = r.doc_id
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -1642,38 +1536,6 @@ FROM sc, ws
 
 
 # ---------------------------------------------------------------------------
-# Q: tokenizer fertility — BPE-ish sub-word tokens per whitespace word
-# per stratum (both regex segmentations verified engine-identical).
-# Round-7 consolidation: the registry row is dropped — the per-stratum
-# regex fertility is a strict subset of the scaffolding bpe_fertility
-# exercises under the hard oracle every rotation, and the operator
-# keeps direct pytest coverage (test_dedup_similarity_text.py::
-# test_tokenizer_fertility_*).  q_tokenizer_fertility and its SQL stay
-# importable for the local gate tooling.
-
-
-def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text_ops.tokenizer_fertility(_docs(spark, sf_dir), strata_col="lang")
-
-
-SQL_TOKENIZER_FERTILITY = r"""
-WITH feat AS (
-  SELECT lang,
-         len(string_split_regex(trim(text), '\s+')) AS ws,
-         len(string_split_regex(trim(regexp_replace(text,
-             '([a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s])', ' \1 ', 'g')), '\s+')) AS bpe
-  FROM documents
-)
-SELECT lang, COUNT(*) AS n_docs,
-       CAST(SUM(ws) AS BIGINT) AS ws_tokens,
-       CAST(SUM(bpe) AS BIGINT) AS bpe_tokens,
-       ROUND(CAST(SUM(bpe) AS BIGINT) / CAST(CAST(SUM(ws) AS BIGINT) AS DOUBLE), 6)
-         AS fertility
-FROM feat GROUP BY lang
-"""
-
-
-# ---------------------------------------------------------------------------
 # Q: bigram cross-entropy — the conditional-model upgrade of
 # unigram_logloss (same ln-round-6 convention).
 
@@ -1703,73 +1565,6 @@ GROUP BY s.doc_id
 """
 
 
-SPARK_QUERIES = {
-    "semantic_dedup": q_semantic_dedup,
-    "jaccard_exact": q_jaccard_exact,
-    "dup_span_audit": q_dup_span_audit,
-    "quality_topk": q_quality_topk,
-    "domain_mix": q_domain_mix,
-    "bigram_logloss": q_bigram_logloss,
-    "term_stats": q_term_stats,
-    "unigram_logloss": q_unigram_logloss,
-    "vocab_coverage": q_vocab_coverage,
-    "doc_pack": q_doc_pack,
-    "boilerplate": q_boilerplate,
-    "c4_filter": q_c4_filter,
-    "text_quality": q_text_quality,
-    "lang_id": q_lang_id,
-    "dedup_exact": q_dedup_exact,
-    "minhash_dedup": q_minhash_dedup,
-    "simhash_pairs": q_simhash_pairs,
-    "doc_fingerprint": q_doc_fingerprint,
-    "doc_winnow": q_doc_winnow,
-    "token_rollup": q_token_rollup,
-    "ann_cosine": q_ann_cosine,
-    "embedding_near_dup": q_embedding_near_dup,
-    "embedding_clusters": q_embedding_clusters,
-    "ann_ivf": q_ann_ivf,
-    "ann_lsh": q_ann_lsh,
-    "repetition_filter": q_repetition_filter,
-    "decontamination": q_decontamination,
-    "sample_mix": q_sample_mix,
-    "dedup_clusters": q_dedup_clusters,
-    "doc_chunks": q_doc_chunks,
-}
-
-ORACLE_SQL = {
-    "semantic_dedup": SQL_SEMANTIC_DEDUP,
-    "jaccard_exact": SQL_JACCARD_EXACT,
-    "dup_span_audit": SQL_DUP_SPAN_AUDIT,
-    "quality_topk": SQL_QUALITY_TOPK,
-    "domain_mix": SQL_DOMAIN_MIX,
-    "bigram_logloss": SQL_BIGRAM_LOGLOSS,
-    "term_stats": SQL_TERM_STATS,
-    "unigram_logloss": SQL_UNIGRAM_LOGLOSS,
-    "vocab_coverage": SQL_VOCAB_COVERAGE,
-    "doc_pack": SQL_DOC_PACK,
-    "boilerplate": SQL_BOILERPLATE,
-    "c4_filter": SQL_C4_FILTER,
-    "text_quality": SQL_TEXT_QUALITY,
-    "lang_id": SQL_LANG_ID,
-    "dedup_exact": SQL_DEDUP_EXACT,
-    "minhash_dedup": SQL_MINHASH_DEDUP,
-    "simhash_pairs": SQL_SIMHASH_PAIRS,
-    "doc_fingerprint": SQL_DOC_FINGERPRINT,
-    "doc_winnow": SQL_DOC_WINNOW,
-    "token_rollup": SQL_TOKEN_ROLLUP,
-    "ann_cosine": SQL_ANN_COSINE,
-    "embedding_near_dup": SQL_EMBEDDING_NEAR_DUP,
-    "embedding_clusters": SQL_EMBEDDING_CLUSTERS,
-    "ann_lsh": SQL_ANN_LSH,
-    "ann_ivf": SQL_ANN_IVF,
-    "repetition_filter": SQL_REPETITION_FILTER,
-    "decontamination": SQL_DECONTAMINATION,
-    "sample_mix": SQL_SAMPLE_MIX,
-    "dedup_clusters": SQL_DEDUP_CLUSTERS,
-    "doc_chunks": SQL_DOC_CHUNKS,
-}
-
-
 # ---------------------------------------------------------------------------
 # Q: EXACT set-containment join (ordered pairs, |A∩B|/|A| ≥ t) — the
 # asymmetric near-dup tier that catches short-doc-inside-long-doc
@@ -1794,9 +1589,6 @@ SELECT id_a, id_b, containment FROM (
   FROM hashed a JOIN hashed b ON a.doc_id <> b.doc_id
 ) WHERE containment >= 0.5
 """
-
-SPARK_QUERIES["containment"] = q_containment
-ORACLE_SQL["containment"] = SQL_CONTAINMENT
 
 
 # ---------------------------------------------------------------------------
@@ -1841,9 +1633,6 @@ SELECT doc_id, CAST(n AS BIGINT) AS n_scored,
              / (CAST(n AS DOUBLE) * 1000000000.0), 6) AS entropy_bits
 FROM agg, lut
 """
-
-SPARK_QUERIES["char_entropy"] = q_char_entropy
-ORACLE_SQL["char_entropy"] = SQL_CHAR_ENTROPY
 
 
 # ---------------------------------------------------------------------------
@@ -1920,6 +1709,7 @@ LIMIT {k}
 
 SQL_BM25_SEARCH = _bm25_sql(_BM25_TERMS, k=25)
 
+
 # r7 session-2 consolidation: the bm25_search registry row is dropped —
 # bm25_indexed carries the SAME oracle (cross-tier parity), and the
 # scan-local tier stays covered by the multiplicity-parity pytest
@@ -1935,10 +1725,6 @@ def q_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text_ops.bm25_topk_indexed(
         _docs(spark, sf_dir), query_terms=_BM25_TERMS, k=25
     )
-
-
-SPARK_QUERIES["bm25_indexed"] = q_bm25_indexed
-ORACLE_SQL["bm25_indexed"] = SQL_BM25_SEARCH
 
 
 # ---------------------------------------------------------------------------
@@ -2043,5 +1829,600 @@ SQL_HYBRID_RRF = _hybrid_rrf_sql(
     _BM25_TERMS, k=_HYBRID_K, rrf_k=_HYBRID_RRF_K, qvec=_HYBRID_QVEC
 )
 
-SPARK_QUERIES["hybrid_rrf"] = q_hybrid_rrf
-ORACLE_SQL["hybrid_rrf"] = SQL_HYBRID_RRF
+
+# ---------------------------------------------------------------------------
+# classifier_score — hashed linear classifier inference under the hard
+# oracle.  The Naive-Bayes fit runs ONCE, driver-side, in pure Python,
+# over the fixed labeled training set below: exact integer token
+# counts → nano-quantized log-odds weights.  Both engines receive the
+# SAME integer weight literals, so the only arithmetic compared
+# cross-engine is tokenize → md5-hash → exact BIGINT weight sums →
+# one division (all deterministic); `ln` never enters the comparison.
+# The in-engine fit (classifier.fit_hashed_nb) is pinned to this
+# Python twin by tests/test_classifier.py within 1 nano-ulp.
+
+_CLF_DIM = 4096
+_CLF_ALPHA = 1.0
+# balanced classes => class prior ratio is 1 => bias_nano = 0 exactly,
+# independent of rounding mode.  Vocabulary deliberately overlaps the
+# harness documents' query-engine wordlist so scores spread.
+_CLF_TRAIN: tuple[tuple[int, str], ...] = (
+    (1, "the query plan joins the sorted table and streams each row"),
+    (1, "a merge join reads the sorted key column and the filter prunes"),
+    (1, "the scan reads the column data and the window sorts each group"),
+    (1, "a hash join builds a table and probes each key in the stream"),
+    (1, "the agg groups the data by key and sums the value column"),
+    (1, "a sort merge join shuffles the row data on the join key"),
+    (1, "the filter drops each row and the query reads the small table"),
+    (1, "a batch stream writes the part data to the big sorted table"),
+    (0, "buy cheap deals now click here free offer win big prize today"),
+    (0, "best price sale free shipping click now limited offer deal"),
+    (0, "win cash now free spins click the banner claim your prize"),
+    (0, "cheap pills best deals order now free bonus click to win"),
+    (0, "exclusive offer buy now sale ends today free gift click here"),
+    (0, "hot singles near you click now free trial best value deal"),
+    (0, "earn money fast work from home free signup click the link"),
+    (0, "lowest price guaranteed buy cheap now free coupon win daily"),
+)
+
+
+def _bpe_ish_py(text: str) -> list[str]:
+    """Python twin of operators.text.bpe_ish_tokens (letter runs, digit
+    runs, single punctuation) — used only inside the driver-side fit,
+    where both engines inherit its output as shared literals."""
+    spaced = re.sub(r"([a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s])", r" \1 ", text)
+    return [t for t in re.split(r"\s+", spaced.strip()) if t]
+
+
+def _md5_feature_py(token: str, dim: int = _CLF_DIM) -> int:
+    return int(hashlib.md5(token.encode("utf-8")).hexdigest()[:8], 16) % dim
+
+
+def _round_half_away(x: float) -> int:
+    return int(math.floor(abs(x) + 0.5)) * (1 if x >= 0 else -1)
+
+
+@lru_cache(maxsize=1)
+def clf_model() -> tuple[tuple[tuple[int, int], ...], int]:
+    """((feature, w_nano), ...) sorted by feature, plus bias_nano —
+    the pure-Python Naive-Bayes fit over _CLF_TRAIN (exact integer
+    counts; ln runs here once, never in either engine)."""
+    c1: Counter[int] = Counter()
+    c0: Counter[int] = Counter()
+    t1 = t0 = d1 = 0
+    for y, text in _CLF_TRAIN:
+        feats = [_md5_feature_py(t) for t in _bpe_ish_py(text)]
+        if y == 1:
+            d1 += 1
+            t1 += len(feats)
+            c1.update(feats)
+        else:
+            t0 += len(feats)
+            c0.update(feats)
+    d = len(_CLF_TRAIN)
+    bias = _round_half_away(
+        math.log((d1 + _CLF_ALPHA) / (d - d1 + _CLF_ALPHA)) * 1e9
+    )
+    weights = {}
+    for f in set(c1) | set(c0):
+        w = math.log((c1[f] + _CLF_ALPHA) / (t1 + _CLF_ALPHA * _CLF_DIM)) - math.log(
+            (c0[f] + _CLF_ALPHA) / (t0 + _CLF_ALPHA * _CLF_DIM)
+        )
+        weights[f] = _round_half_away(w * 1e9)
+    return tuple(sorted(weights.items())), bias
+
+
+def q_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .operators import classifier as clf
+
+    weights, bias = clf_model()
+    wdf = spark.createDataFrame(list(weights), "feature long, w_nano long")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    scored = clf.score_hashed_linear(
+        docs, wdf, dim=_CLF_DIM, bias_nano=bias, feature_hash="md5"
+    )
+    return scored.select(
+        "doc_id", "score", (F.col("score") > 0).alias("is_positive")
+    )
+
+
+def _sql_classifier_score() -> str:
+    weights, bias = clf_model()
+    values = ", ".join(f"({f}, {w})" for f, w in weights)
+    return f"""
+WITH w (feature, w_nano) AS (VALUES {values}),
+tok AS (
+  SELECT doc_id,
+         unnest(string_split_regex(trim(regexp_replace(text,
+             '([a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s])', ' \\1 ', 'g')), '\\s+')) AS tok
+  FROM documents
+),
+tf AS (
+  SELECT doc_id,
+         ('0x' || substr(md5(tok), 1, 8))::BIGINT % {_CLF_DIM} AS feature,
+         COUNT(*) AS n
+  FROM tok WHERE tok <> '' GROUP BY doc_id, feature
+),
+s AS (
+  SELECT t.doc_id, CAST(SUM(t.n * w.w_nano) AS BIGINT) AS sn
+  FROM tf t JOIN w ON t.feature = w.feature GROUP BY t.doc_id
+)
+SELECT d.doc_id,
+       (COALESCE(s.sn, 0) + {bias}) / 1000000000.0 AS score,
+       ((COALESCE(s.sn, 0) + {bias}) > 0) AS is_positive
+FROM documents d LEFT JOIN s ON d.doc_id = s.doc_id
+"""
+
+
+# ---------------------------------------------------------------------------
+# cross_corpus — NEW×REF near-dup probe: the incoming shard
+# (doc_id % 10 = 0) probed against the rest of the corpus as the
+# reference.  The oracle replays shingle hashing, MinHash banding, the
+# NEW×REF band-bucket join, exact Jaccard over the shared 32-bit
+# shingle-hash sets, the >= threshold filter on the ROUNDED jaccard
+# (mirroring the operator), and the (jaccard desc, ref_id asc)
+# best-match pick.  Completeness of the LSH probe vs brute force is
+# audited separately in tests/test_cross_corpus.py — the oracle
+# verifies the probe's exact semantics, bucket-for-bucket.
+
+_CC_N, _CC_BANDS, _CC_K, _CC_THRESH = 8, 4, 5, 0.5
+
+
+def q_cross_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .operators import dedup as dedup_ops
+
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    new = docs.filter(F.col("doc_id") % 10 == 0)
+    ref = docs.filter(F.col("doc_id") % 10 != 0)
+    out = dedup_ops.cross_corpus_near_dups(
+        new,
+        ref,
+        shingle_k=_CC_K,
+        n_hashes=_CC_N,
+        bands=_CC_BANDS,
+        threshold=_CC_THRESH,
+    )
+    return out.select(
+        "new_id", "ref_id", "jaccard", F.col("n_ref_matches").cast(_L).alias("n_ref_matches")
+    )
+
+
+def _sql_cross_corpus() -> str:
+    mins = ",\n         ".join(
+        f"list_min(list_transform(h32, h -> ({MINHASH_A[i]} * (h % {MINHASH_P}) "
+        f"+ {MINHASH_B[i]}) % {MINHASH_P})) AS mh_{i}"
+        for i in range(_CC_N)
+    )
+    rows_per_band = _CC_N // _CC_BANDS
+    bands = "\n  UNION ALL\n".join(
+        "  SELECT doc_id, {b} AS band, md5({expr}) AS bucket FROM sig".format(
+            b=b,
+            expr=" || '|' || ".join(
+                f"mh_{b * rows_per_band + r}::VARCHAR" for r in range(rows_per_band)
+            ),
+        )
+        for b in range(_CC_BANDS)
+    )
+    return f"""
+WITH tok AS (
+  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents
+  WHERE len(string_split_regex(trim(text), '\\s+')) >= {_CC_K}
+),
+shingled AS (
+  SELECT doc_id,
+         list_transform(generate_series(1, len(t) - {_CC_K - 1}),
+                        i -> array_to_string(t[i:i+{_CC_K - 1}], ' ')) AS sh
+  FROM tok
+),
+hashed AS (
+  SELECT doc_id,
+         list_distinct(list_transform(sh, s -> ('0x' || substr(md5(s), 1, 8))::BIGINT)) AS h32
+  FROM shingled
+),
+sig AS (
+  SELECT doc_id,
+         {mins}
+  FROM hashed
+),
+banded AS (
+{bands}
+),
+cand AS (
+  SELECT DISTINCT n.doc_id AS nid, r.doc_id AS rid
+  FROM banded n JOIN banded r ON n.band = r.band AND n.bucket = r.bucket
+  WHERE n.doc_id % 10 = 0 AND r.doc_id % 10 <> 0
+),
+scored AS (
+  SELECT c.nid, c.rid,
+         ROUND(CAST(len(list_intersect(sa.h32, sb.h32)) AS DOUBLE)
+               / (len(sa.h32) + len(sb.h32) - len(list_intersect(sa.h32, sb.h32))), 6)
+           AS jaccard
+  FROM cand c
+  JOIN hashed sa ON c.nid = sa.doc_id
+  JOIN hashed sb ON c.rid = sb.doc_id
+),
+filt AS (SELECT * FROM scored WHERE jaccard >= {_CC_THRESH}),
+best AS (
+  SELECT nid, rid, jaccard,
+         ROW_NUMBER() OVER (PARTITION BY nid ORDER BY jaccard DESC, rid) AS rk,
+         COUNT(*) OVER (PARTITION BY nid) AS nm
+  FROM filt
+)
+SELECT nid AS new_id, rid AS ref_id, jaccard,
+       CAST(nm AS BIGINT) AS n_ref_matches
+FROM best WHERE rk = 1
+"""
+
+
+# ---------------------------------------------------------------------------
+# contam_score — graded contamination, exact-integer surface: counts
+# are BIGINTs and the fraction is nano units via exact integer div, so
+# the comparison never touches a rounded float.
+
+
+def q_contam_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .operators.text import contamination_score
+
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    benchmark = docs.filter(F.col("doc_id") % 97 == 0)
+    train = docs.filter(F.col("doc_id") % 97 != 0)
+    out = contamination_score(train, benchmark, n=3)
+    return out.select(
+        "doc_id",
+        "n_grams",
+        "n_overlap",
+        F.expr("CASE WHEN n_grams > 0 THEN (n_overlap * 1000000000L) div n_grams ELSE 0L END")
+        .cast(_L)
+        .alias("overlap_nano"),
+    )
+
+
+SQL_CONTAM_SCORE = """
+WITH toks AS (
+  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t FROM documents
+),
+tg AS (
+  SELECT DISTINCT doc_id,
+         unnest(list_transform(generate_series(1, len(t) - 2),
+                i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2])) AS gram
+  FROM toks WHERE len(t) >= 3
+),
+bg AS (SELECT DISTINCT gram FROM tg WHERE doc_id % 97 = 0),
+per AS (
+  SELECT t.doc_id,
+         COUNT(*) AS n_grams,
+         COUNT(b.gram) AS n_overlap
+  FROM (SELECT * FROM tg WHERE doc_id % 97 <> 0) t
+  LEFT JOIN bg b USING (gram)
+  GROUP BY t.doc_id
+)
+SELECT d.doc_id,
+       CAST(COALESCE(p.n_grams, 0) AS BIGINT) AS n_grams,
+       CAST(COALESCE(p.n_overlap, 0) AS BIGINT) AS n_overlap,
+       CAST(CASE WHEN COALESCE(p.n_grams, 0) > 0
+                 THEN (p.n_overlap * 1000000000) // p.n_grams
+                 ELSE 0 END AS BIGINT) AS overlap_nano
+FROM documents d LEFT JOIN per p USING (doc_id)
+WHERE d.doc_id % 97 <> 0
+"""
+
+
+# ---------------------------------------------------------------------------
+# lang_segment — per-line language segmentation with scrub.  The
+# documents text is single-line, so each doc gets one French-marker OR
+# English-marker line (mod 3) plus one German-marker OR blank line
+# (mod 4): voting, the lexicographic tie-breaks (smallest lang wins the
+# per-line argmax, greatest wins the per-doc majority), und-neutral
+# blank lines and the ordered scrub rebuild are all exercised.
+
+
+def _lang_segment_input(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = read_table(spark, sf_dir, "documents")
+    line2 = F.when(
+        F.col("doc_id") % 3 == 0, F.lit("le et les des un")
+    ).otherwise(F.lit("the of and to is"))
+    line3 = F.when(
+        F.col("doc_id") % 4 == 0, F.lit("der die das und ist")
+    ).otherwise(F.lit(""))
+    return docs.select(
+        "doc_id",
+        F.concat_ws("\n", F.col("text"), line2, line3).alias("text"),
+    )
+
+
+def q_lang_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .operators.text import segment_languages
+
+    out = segment_languages(
+        _lang_segment_input(spark, sf_dir), scrub=True
+    )
+    return out.select(
+        "doc_id", "doc_lang", "lang_line_share", "scrubbed_text"
+    )
+
+
+def _marker_line_sql(lang: str, line: str) -> str:
+    from .operators.text import LANG_MARKERS
+
+    lst = ", ".join(f"'{w}'" for w in LANG_MARKERS[lang])
+    return (
+        f"len(list_filter(string_split_regex(trim({line}), '\\s+'),"
+        f" x -> x IN ({lst})))"
+    )
+
+
+def _sql_lang_segment() -> str:
+    g = "GREATEST(s_de, s_en, s_es, s_fr)"
+    return f"""
+WITH base AS (
+  SELECT doc_id,
+         text || chr(10)
+         || CASE WHEN doc_id % 3 = 0 THEN 'le et les des un'
+                 ELSE 'the of and to is' END
+         || chr(10)
+         || CASE WHEN doc_id % 4 = 0 THEN 'der die das und ist'
+                 ELSE '' END AS text
+  FROM documents
+),
+lines AS (
+  -- multiple unnests in a SELECT list zip element-wise in DuckDB
+  SELECT doc_id,
+         unnest(generate_series(1, len(parts))) AS pos,
+         unnest(parts) AS line
+  FROM (SELECT doc_id, string_split(text, chr(10)) AS parts FROM base)
+),
+scored AS (
+  SELECT doc_id, pos, line,
+         {_marker_line_sql('de', 'line')} AS s_de,
+         {_marker_line_sql('en', 'line')} AS s_en,
+         {_marker_line_sql('es', 'line')} AS s_es,
+         {_marker_line_sql('fr', 'line')} AS s_fr
+  FROM lines
+),
+pred AS (
+  SELECT doc_id, pos, line,
+         CASE WHEN {g} = 0 THEN 'und'
+              WHEN s_de = {g} THEN 'de'
+              WHEN s_en = {g} THEN 'en'
+              WHEN s_es = {g} THEN 'es'
+              ELSE 'fr' END AS lang
+  FROM scored
+),
+votes AS (
+  SELECT doc_id, lang, CAST(COUNT(*) AS BIGINT) AS n
+  FROM pred WHERE lang <> 'und' GROUP BY doc_id, lang
+),
+winner AS (
+  SELECT doc_id, lang AS doc_lang,
+         ROUND(CAST(n AS DOUBLE) / voted, 6) AS share
+  FROM (
+    SELECT doc_id, lang, n,
+           SUM(n) OVER (PARTITION BY doc_id) AS voted,
+           ROW_NUMBER() OVER (
+             PARTITION BY doc_id ORDER BY n DESC, lang DESC) AS rk
+    FROM votes
+  ) WHERE rk = 1
+),
+scrub AS (
+  SELECT p.doc_id,
+         array_to_string(list(p.line ORDER BY p.pos), chr(10)) AS scrubbed_text
+  FROM pred p JOIN winner w ON p.doc_id = w.doc_id
+  WHERE p.lang = w.doc_lang OR p.lang = 'und'
+  GROUP BY p.doc_id
+)
+SELECT b.doc_id,
+       COALESCE(w.doc_lang, 'und') AS doc_lang,
+       COALESCE(w.share, 1.0) AS lang_line_share,
+       COALESCE(s.scrubbed_text, b.text) AS scrubbed_text
+FROM base b
+LEFT JOIN winner w ON b.doc_id = w.doc_id
+LEFT JOIN scrub s ON b.doc_id = s.doc_id
+"""
+
+
+# ---------------------------------------------------------------------------
+# drift_audit — embedding-distribution drift between the even and odd
+# vec_id halves against a FIXED shared centroid set (vec_id < 8), so
+# the oracle replays a single nearest-centroid pass (no k-means): exact
+# occupancy counts and BIGINT-div nano shares.
+
+
+def q_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .operators.similarity import embedding_drift
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    cents = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").cast("int").alias("centroid_id"),
+        F.col("embedding").alias("centroid"),
+    )
+    old = emb.filter(F.col("vec_id") % 2 == 0)
+    new = emb.filter(F.col("vec_id") % 2 == 1)
+    return embedding_drift(old, new, cents)
+
+
+def _sql_drift_audit() -> str:
+    cos = (
+        f"({_sql_dot('e.embedding', 'c.centroid')}"
+        f" / ({_sql_norm('e.embedding')} * {_sql_norm('c.centroid')}))"
+    )
+    return f"""
+WITH cents AS (
+  SELECT CAST(vec_id AS INTEGER) AS centroid_id, embedding AS centroid
+  FROM embeddings WHERE vec_id < 8
+),
+assign AS (
+  SELECT vec_id, centroid_id, side FROM (
+    SELECT e.vec_id, c.centroid_id, e.vec_id % 2 AS side,
+           ROW_NUMBER() OVER (
+             PARTITION BY e.vec_id
+             ORDER BY {cos} DESC, c.centroid_id) AS rk
+    FROM embeddings e CROSS JOIN cents c
+  ) WHERE rk = 1
+),
+occ AS (
+  SELECT centroid_id,
+         CAST(SUM(CASE WHEN side = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_old,
+         CAST(SUM(CASE WHEN side = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_new
+  FROM assign GROUP BY centroid_id
+),
+filled AS (
+  SELECT c.centroid_id,
+         COALESCE(o.n_old, 0) AS n_old, COALESCE(o.n_new, 0) AS n_new
+  FROM cents c LEFT JOIN occ o ON c.centroid_id = o.centroid_id
+),
+tot AS (
+  SELECT CAST(SUM(n_old) AS BIGINT) AS t_old,
+         CAST(SUM(n_new) AS BIGINT) AS t_new
+  FROM filled
+)
+SELECT centroid_id, n_old, n_new,
+       CAST(CASE WHEN t_old > 0 THEN (n_old * 1000000000) // t_old
+                 ELSE 0 END AS BIGINT) AS share_old_nano,
+       CAST(CASE WHEN t_new > 0 THEN (n_new * 1000000000) // t_new
+                 ELSE 0 END AS BIGINT) AS share_new_nano,
+       CAST(CASE WHEN t_new > 0 THEN (n_new * 1000000000) // t_new
+                 ELSE 0 END
+            - CASE WHEN t_old > 0 THEN (n_old * 1000000000) // t_old
+                   ELSE 0 END AS BIGINT) AS delta_nano
+FROM filled, tot
+"""
+
+
+# ---------------------------------------------------------------------------
+# pca_cov — exact covariance cells (``operators.similarity.
+# covariance_cells``, the distributed half of ``embedding_pca``):
+# integer-quantized component products summed as DECIMAL(38,0) over the
+# upper triangle; the oracle replays the same arithmetic with HUGEINT
+# sums.  The sums are exact integers in BOTH engines, so this row is
+# immune to float reduction order.
+
+
+def q_pca_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .operators.similarity import covariance_cells
+    from .session import read_table
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    cells = covariance_cells(emb, vec_col="embedding", quant=10**6)
+    # exact integers travel as DIGIT STRINGS on both sides: DECIMAL vs
+    # HUGEINT never enters the cross-engine type comparison
+    return cells.select(
+        F.col("i").cast("int").alias("i"),
+        F.col("j").cast("int").alias("j"),
+        F.col("s").cast("decimal(38,0)").cast("string").alias("s"),
+    )
+
+
+SQL_PCA_COV = """
+WITH q AS (
+  SELECT vec_id,
+         list_transform(embedding,
+           x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
+  FROM embeddings
+),
+cells AS (
+  SELECT i.i AS i, j.j AS j,
+         CAST(q.qv[i.i + 1] AS HUGEINT) * q.qv[j.j + 1] AS p
+  FROM q,
+       UNNEST(generate_series(0, len(qv) - 1)) AS i(i),
+       UNNEST(generate_series(0, len(qv) - 1)) AS j(j)
+  WHERE j.j >= i.i
+)
+SELECT CAST(i AS INTEGER) AS i, CAST(j AS INTEGER) AS j,
+       CAST(SUM(p) AS VARCHAR) AS s
+FROM cells GROUP BY i, j
+"""
+
+
+# ---------------------------------------------------------------------------
+# exports
+
+QUERIES = {
+    "semantic_dedup": q_semantic_dedup,
+    "jaccard_exact": q_jaccard_exact,
+    "dup_span_audit": q_dup_span_audit,
+    "quality_topk": q_quality_topk,
+    "domain_mix": q_domain_mix,
+    "bigram_logloss": q_bigram_logloss,
+    "term_stats": q_term_stats,
+    "unigram_logloss": q_unigram_logloss,
+    "vocab_coverage": q_vocab_coverage,
+    "doc_pack": q_doc_pack,
+    "boilerplate": q_boilerplate,
+    "c4_filter": q_c4_filter,
+    "text_quality": q_text_quality,
+    "lang_id": q_lang_id,
+    "dedup_exact": q_dedup_exact,
+    "minhash_dedup": q_minhash_dedup,
+    "simhash_pairs": q_simhash_pairs,
+    "doc_fingerprint": q_doc_fingerprint,
+    "doc_winnow": q_doc_winnow,
+    "token_rollup": q_token_rollup,
+    "ann_cosine": q_ann_cosine,
+    "embedding_near_dup": q_embedding_near_dup,
+    "embedding_clusters": q_embedding_clusters,
+    "ann_ivf": q_ann_ivf,
+    "ann_lsh": q_ann_lsh,
+    "repetition_filter": q_repetition_filter,
+    "decontamination": q_decontamination,
+    "sample_mix": q_sample_mix,
+    "dedup_clusters": q_dedup_clusters,
+    "doc_chunks": q_doc_chunks,
+    "containment": q_containment,
+    "char_entropy": q_char_entropy,
+    "bm25_indexed": q_bm25_indexed,
+    "hybrid_rrf": q_hybrid_rrf,
+    "classifier_score": q_classifier_score,
+    "cross_corpus": q_cross_corpus,
+    "contam_score": q_contam_score,
+    "lang_segment": q_lang_segment,
+    "drift_audit": q_drift_audit,
+    "pca_cov": q_pca_cov,
+}
+
+
+def oracle_sql() -> dict[str, str]:
+    return {
+        "semantic_dedup": SQL_SEMANTIC_DEDUP,
+        "jaccard_exact": SQL_JACCARD_EXACT,
+        "dup_span_audit": SQL_DUP_SPAN_AUDIT,
+        "quality_topk": SQL_QUALITY_TOPK,
+        "domain_mix": SQL_DOMAIN_MIX,
+        "bigram_logloss": SQL_BIGRAM_LOGLOSS,
+        "term_stats": SQL_TERM_STATS,
+        "unigram_logloss": SQL_UNIGRAM_LOGLOSS,
+        "vocab_coverage": SQL_VOCAB_COVERAGE,
+        "doc_pack": SQL_DOC_PACK,
+        "boilerplate": SQL_BOILERPLATE,
+        "c4_filter": SQL_C4_FILTER,
+        "text_quality": SQL_TEXT_QUALITY,
+        "lang_id": SQL_LANG_ID,
+        "dedup_exact": SQL_DEDUP_EXACT,
+        "minhash_dedup": SQL_MINHASH_DEDUP,
+        "simhash_pairs": SQL_SIMHASH_PAIRS,
+        "doc_fingerprint": SQL_DOC_FINGERPRINT,
+        "doc_winnow": SQL_DOC_WINNOW,
+        "token_rollup": SQL_TOKEN_ROLLUP,
+        "ann_cosine": SQL_ANN_COSINE,
+        "embedding_near_dup": SQL_EMBEDDING_NEAR_DUP,
+        "embedding_clusters": SQL_EMBEDDING_CLUSTERS,
+        "ann_ivf": SQL_ANN_IVF,
+        "ann_lsh": SQL_ANN_LSH,
+        "repetition_filter": SQL_REPETITION_FILTER,
+        "decontamination": SQL_DECONTAMINATION,
+        "sample_mix": SQL_SAMPLE_MIX,
+        "dedup_clusters": SQL_DEDUP_CLUSTERS,
+        "doc_chunks": SQL_DOC_CHUNKS,
+        "containment": SQL_CONTAINMENT,
+        "char_entropy": SQL_CHAR_ENTROPY,
+        "bm25_indexed": SQL_BM25_SEARCH,
+        "hybrid_rrf": SQL_HYBRID_RRF,
+        "classifier_score": _sql_classifier_score(),
+        "cross_corpus": _sql_cross_corpus(),
+        "contam_score": SQL_CONTAM_SCORE,
+        "lang_segment": _sql_lang_segment(),
+        "drift_audit": _sql_drift_audit(),
+        "pca_cov": SQL_PCA_COV,
+    }
+
+
+UNIONS: dict[str, tuple[str, str]] = {}

@@ -20,10 +20,14 @@ import threading
 from pyspark.sql import SparkSession
 
 # partitioned_checkpoint scopes AQE off for its one producing job; the
-# toggle mutates a session-global conf, so concurrent leg builds
-# (overlap_builds) must serialize around it or one thread's restore
-# could clobber another's scope
+# toggle mutates a session-global conf, so concurrent callers must
+# serialize around it or one thread's restore could clobber another's
+# scope
 _AQE_TOGGLE_LOCK = threading.Lock()
+# Set on overlap_builds' worker threads.  partitioned_checkpoint refuses
+# to run there: its AQE toggle is session-global, so a leg planning
+# concurrently on another thread would silently build with AQE off.
+_OVERLAP_LEG = threading.local()
 
 
 def get_spark(
@@ -145,6 +149,11 @@ def partitioned_checkpoint(df, *cols, n_parts: int | None = None):
     ``n_parts`` defaults to ``defaultParallelism`` — scale-adaptive,
     never a local constant.
     """
+    if getattr(_OVERLAP_LEG, "active", False):
+        raise RuntimeError(
+            "partitioned_checkpoint cannot run inside an overlap_builds leg: "
+            "its session-global AQE toggle would leak into the other legs"
+        )
     spark = df.sparkSession
     n = n_parts or spark.sparkContext.defaultParallelism
     with _AQE_TOGGLE_LOCK:
@@ -220,18 +229,24 @@ def overlap_builds(*thunks):
     lets Spark's scheduler back-fill: leg B's checkpoint tasks run on
     the cores leg A's straggler tasks freed.  Results are identical by
     construction — each leg runs the exact same jobs, only their wall
-    clocks overlap (job descriptions stay correct per thread; the one
-    session-global conf toggle, partitioned_checkpoint's AQE scope, is
-    serialized by ``_AQE_TOGGLE_LOCK``).
+    clocks overlap (job descriptions stay correct per thread).  A leg
+    may not call partitioned_checkpoint, whose AQE toggle is
+    session-global; it raises there.
 
-    Returns the thunk results in argument order.  With one thunk (or
-    ``SPARK_GRAFT_OVERLAP=0`` for A/B measurement) it degrades to the
-    sequential build.
+    Returns the thunk results in argument order.  With one thunk it
+    degrades to the sequential build.
     """
-    if len(thunks) == 1 or os.environ.get("SPARK_GRAFT_OVERLAP", "1") == "0":
+    if len(thunks) == 1:
         return [t() for t in thunks]
     from concurrent.futures import ThreadPoolExecutor
 
+    def leg(thunk):
+        _OVERLAP_LEG.active = True
+        try:
+            return thunk()
+        finally:
+            _OVERLAP_LEG.active = False
+
     with ThreadPoolExecutor(max_workers=min(4, len(thunks))) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        futures = [pool.submit(leg, t) for t in thunks]
         return [f.result() for f in futures]

@@ -329,6 +329,25 @@ def test_metrics_table_broadcasts_nation_single_expand(spark):
     assert "lineitem" not in plan
 
 
+def test_partitioned_checkpoint_refuses_overlap_legs(spark):
+    # partitioned_checkpoint flips the session-global AQE flag, which a
+    # leg planning concurrently on another overlap_builds thread would
+    # see: it raises inside a leg and runs normally everywhere else
+    from peskas_mozambique_data_pipeline_spark.session import (
+        overlap_builds,
+        partitioned_checkpoint,
+    )
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    df = spark.range(100).withColumnRenamed("id", "k")
+    with pytest.raises(RuntimeError, match="overlap_builds"):
+        overlap_builds(lambda: partitioned_checkpoint(df, "k"), df.count)
+    assert overlap_builds(df.count, df.count) == [100, 100]
+    out = partitioned_checkpoint(df, "k", n_parts=3)
+    assert out.rdd.getNumPartitions() == 3 and out.count() == 100
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
+
+
 def test_interval_join_is_equi_join_not_nested_loop(spark):
     # the bucketized range join must plan as an equi-join on
     # (user_id, bin) — a raw theta join would fall into a

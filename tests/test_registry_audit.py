@@ -1,15 +1,10 @@
-"""Round-9 registry invariants (registry_audit + the staged promotion).
+"""Registry-wide invariants and the classifier row's driver-side fit:
 
-The oracle values of every r9 row are hash-verified by the gate
-(tools/check_correctness.py, run at sf0.001/0.01/0.1 and CPUS=3 before
-registration — see NOTES r9).  What pytest adds on top:
-
-1. window arithmetic — the registry holds exactly 94 rows, the driver
-   window (first 50) starts with the 15 never-driver-verified r9 rows,
-   and nothing is registered twice;
-2. retirement bookkeeping — every name a union row replaces is out of
-   the registry dicts but importable via RETIRED_* (so the local gate
-   can still verify retired rows by name);
+1. window arithmetic — the registry holds exactly 100 rows in the
+   planned head/tail order, and nothing is registered twice;
+2. retirement bookkeeping — every union leg is out of the registry
+   dicts but importable via RETIRED_* (so the local gate can still
+   verify retired rows by name);
 3. md5 feature-hash twin — the engine-portable classifier feature id
    (Spark `conv(substring(md5,1,8),16,10) % dim`) equals the pure
    Python hashlib twin the driver-side fit uses, token for token;
@@ -22,7 +17,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from peskas_mozambique_data_pipeline_spark import registry, registry_audit
+from peskas_mozambique_data_pipeline_spark import registry, registry_audit, registry_text
 
 
 def test_r15_window_arithmetic():
@@ -47,14 +42,15 @@ def test_r15_window_arithmetic():
 
 
 def test_r9_retirement_bookkeeping():
-    replaced = {n for pair in registry_audit.AUDIT_REPLACES.values() for n in pair}
+    replaced = {n for pair in registry_audit.UNIONS.values() for n in pair}
     replaced.add("dim_enrichment")
     for n in replaced:
         assert n not in registry.SPARK_QUERIES
         assert n in registry.RETIRED_QUERIES
         assert n in registry.RETIRED_ORACLE_SQL
-    for union_name in registry_audit.AUDIT_REPLACES:
-        assert registry.SPARK_QUERIES[union_name] is registry_audit.SPARK_QUERIES[union_name]
+    for union_name in registry_audit.UNIONS:
+        fn = registry.SPARK_QUERIES.get(union_name) or registry.RETIRED_QUERIES[union_name]
+        assert fn is registry_audit.QUERIES[union_name]
 
 
 def test_md5_feature_hash_matches_python_twin(spark):
@@ -63,7 +59,7 @@ def test_md5_feature_hash_matches_python_twin(spark):
     )
 
     toks = ["the", "Zanzibar", "123", "détente", "!", "a" * 50, "口語"]
-    dim = registry_audit._CLF_DIM
+    dim = registry_text._CLF_DIM
     df = spark.createDataFrame([(t,) for t in toks], "tok string")
     got = {
         r["tok"]: r["f"]
@@ -72,7 +68,7 @@ def test_md5_feature_hash_matches_python_twin(spark):
         ).collect()
     }
     for t in toks:
-        assert got[t] == registry_audit._md5_feature_py(t, dim)
+        assert got[t] == registry_text._md5_feature_py(t, dim)
 
 
 def test_md5_and_xxhash_models_not_interchangeable():
@@ -85,10 +81,10 @@ def test_md5_and_xxhash_models_not_interchangeable():
 
 
 def test_clf_model_fit_is_stable_integer_nanos():
-    registry_audit.clf_model.cache_clear()
-    w1, b1 = registry_audit.clf_model()
-    registry_audit.clf_model.cache_clear()
-    w2, b2 = registry_audit.clf_model()
+    registry_text.clf_model.cache_clear()
+    w1, b1 = registry_text.clf_model()
+    registry_text.clf_model.cache_clear()
+    w2, b2 = registry_text.clf_model()
     assert (w1, b1) == (w2, b2)
     assert isinstance(b1, int)
     assert all(isinstance(f, int) and isinstance(w, int) for f, w in w1)

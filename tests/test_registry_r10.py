@@ -1,8 +1,7 @@
-"""Round-10 in-round registry rows (registry_r10): union-leg parity,
-retirement bookkeeping, and python twins for the three new operator
-rows.  Oracle values are hash-verified by the gate
-(tools/check_correctness.py at sf0.001 + sf0.01 before registration);
-pytest pins the structural invariants the gate can't see.
+"""Union-leg parity and retirement for lexical_audit, filter_audit and
+activity_audit, plus python twins for threshold_audit, lang_segment and
+drift_audit.  Oracle values are checked by tests/test_registry.py;
+these pin the structural invariants an oracle can't see.
 """
 
 from __future__ import annotations
@@ -12,9 +11,17 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from peskas_mozambique_data_pipeline_spark import registry, registry_r10
+from peskas_mozambique_data_pipeline_spark import (
+    registry,
+    registry_audit,
+    registry_curation,
+    registry_text,
+)
 
 SF = os.environ.get("SF_DIR", "/root/testdata/sf0.001")
+UNIONS = {
+    u: registry.UNIONS[u] for u in ("lexical_audit", "filter_audit", "activity_audit")
+}
 
 
 def _rows(df):
@@ -25,28 +32,28 @@ def _rows(df):
 
 
 def test_r10_retirement_bookkeeping():
-    replaced = {n for pair in registry_r10.AUDIT_REPLACES.values() for n in pair}
+    replaced = {n for pair in UNIONS.values() for n in pair}
     for n in replaced:
         assert n not in registry.SPARK_QUERIES
         assert n in registry.RETIRED_QUERIES
         assert n in registry.RETIRED_ORACLE_SQL
-    for union_name in registry_r10.AUDIT_REPLACES:
+    for union_name in UNIONS:
         assert (
             registry.SPARK_QUERIES[union_name]
-            is registry_r10.SPARK_QUERIES[union_name]
+            is registry_audit.QUERIES[union_name]
         )
 
 
 @pytest.mark.parametrize(
     "union_name,legs",
-    sorted(registry_r10.AUDIT_REPLACES.items()),
+    sorted(UNIONS.items()),
 )
 def test_union_rows_carry_both_legs_verbatim(spark, union_name, legs):
     """Each union row's leg rows equal the retired query's own output
     (modulo the shared-schema projection): the leg calls the ORIGINAL
     function, so retired operators stay value-verified through the
     union."""
-    union_df = registry_r10.SPARK_QUERIES[union_name](spark, SF)
+    union_df = registry_audit.QUERIES[union_name](spark, SF)
     stats = {
         r["stat"]
         for r in union_df.select("stat").distinct().collect()
@@ -91,7 +98,7 @@ def test_threshold_audit_python_twin(spark):
             r["tp"], r["fp"], r["fn"],
             r["precision_nano"], r["recall_nano"], r["f1_nano"],
         )
-        for r in registry_r10.q_threshold_audit(spark, SF).collect()
+        for r in registry_curation.q_threshold_audit(spark, SF).collect()
     }
     assert got == want
 
@@ -102,11 +109,11 @@ def test_lang_segment_markers_drive_majority(spark):
     and always survive the scrub."""
     out = {
         r["doc_id"]: r
-        for r in registry_r10.q_lang_segment(spark, SF).collect()
+        for r in registry_text.q_lang_segment(spark, SF).collect()
     }
     src = {
         r["doc_id"]: r["text"]
-        for r in registry_r10._lang_segment_input(spark, SF).collect()
+        for r in registry_text._lang_segment_input(spark, SF).collect()
     }
     for d, r in out.items():
         lines = src[d].split("\n")
@@ -123,7 +130,7 @@ def test_lang_segment_markers_drive_majority(spark):
 def test_drift_audit_exact_shares(spark):
     """Nano shares sum to ≤1e9 per side (floor division) and deltas are
     consistent with the shares."""
-    rows = registry_r10.q_drift_audit(spark, SF).collect()
+    rows = registry_text.q_drift_audit(spark, SF).collect()
     assert len(rows) == 8
     assert sum(r["share_old_nano"] for r in rows) <= 10**9
     assert sum(r["share_new_nano"] for r in rows) <= 10**9

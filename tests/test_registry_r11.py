@@ -1,17 +1,18 @@
-"""Round-11 in-round rows: union leg parity, retirement bookkeeping,
-and geo_assign semantics."""
+"""summary_audit leg parity, registration of summary_audit and
+geo_assign, and geo_assign semantics."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
 
-from peskas_mozambique_data_pipeline_spark import registry, registry_r11
+from conftest import assert_rows_registered
+
+from peskas_mozambique_data_pipeline_spark import registry, registry_audit, registry_misc
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_summary_audit_leg_parity(spark):
-    union_rows = registry_r11.q_summary_audit(spark, SF)
+    union_rows = registry_audit.q_summary_audit(spark, SF)
     a = registry.RETIRED_QUERIES["pricing_summary"](spark, SF).collect()
     b = registry.RETIRED_QUERIES["rollup_summary"](spark, SF).collect()
     assert union_rows.count() == len(a) + len(b)
@@ -33,32 +34,17 @@ def test_summary_audit_leg_parity(spark):
 
 
 def test_r11_inround_swap_landed():
-    sql = registry_r11.build_oracle_sql()
-    for name in registry_r11.SPARK_QUERIES:
-        # geo_assign retired into geofam_audit at r13 (leg verbatim) —
-        # it stays importable via the retirement map
-        live = registry.SPARK_QUERIES.get(name)
-        if live is None:
-            assert (
-                registry.RETIRED_QUERIES[name]
-                is registry_r11.SPARK_QUERIES[name]
-            )
-            assert registry.RETIRED_ORACLE_SQL[name] == sql[name]
-            continue
-        assert live is registry_r11.SPARK_QUERIES[name]
-        assert registry.ORACLE_SQL[name] == sql[name]
-    for pair in registry_r11.AUDIT_REPLACES.values():
-        for old in pair:
-            assert old not in registry.SPARK_QUERIES
-            assert old in registry.RETIRED_QUERIES
-            assert old in registry.RETIRED_ORACLE_SQL
+    assert_rows_registered(
+        {"summary_audit": registry_audit, "geo_assign": registry_misc},
+        retired=("geo_assign",),
+    )
 
 
 def test_geo_assign_semantics(spark):
     # sf0.01: 1500 points — enough to land in the thin triangle, the
     # hole and both MultiPolygon parts
     sf = "/root/testdata/sf0.01"
-    out = registry_r11.q_geo_assign(spark, sf)
+    out = registry_misc.q_geo_assign(spark, sf)
     rows = out.collect()
     n_points = spark.read.parquet(f"{sf}/customer.parquet").count()
     assert len(rows) == n_points  # non-overlapping regions: 1 row/point

@@ -1,15 +1,17 @@
-"""Round-12 in-round rows: union leg parity, retirement bookkeeping,
-and kmv_audit semantics (both estimator branches)."""
+"""weights_audit leg parity, registration of weights_audit and
+kmv_audit, and kmv_audit semantics (both estimator branches)."""
 
 from __future__ import annotations
 
-from peskas_mozambique_data_pipeline_spark import registry, registry_r12
+from conftest import assert_rows_registered
+
+from peskas_mozambique_data_pipeline_spark import registry, registry_audit, registry_curation
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_weights_audit_leg_parity(spark):
-    union_rows = registry_r12.q_weights_audit(spark, SF)
+    union_rows = registry_audit.q_weights_audit(spark, SF)
     a = registry.RETIRED_QUERIES["dsir_weights"](spark, SF).collect()
     b = registry.RETIRED_QUERIES["temperature_resample"](spark, SF).collect()
     assert union_rows.count() == len(a) + len(b)
@@ -28,21 +30,14 @@ def test_weights_audit_leg_parity(spark):
 
 
 def test_r12_inround_swap_landed():
-    for name in registry_r12.SPARK_QUERIES:
-        assert registry.SPARK_QUERIES[name] is registry_r12.SPARK_QUERIES[name]
-    sql = registry_r12.build_oracle_sql()
-    for name, text in sql.items():
-        assert registry.ORACLE_SQL[name] == text
-    for pair in registry_r12.AUDIT_REPLACES.values():
-        for old in pair:
-            assert old not in registry.SPARK_QUERIES
-            assert old in registry.RETIRED_QUERIES
-            assert old in registry.RETIRED_ORACLE_SQL
+    assert_rows_registered(
+        {"weights_audit": registry_audit, "kmv_audit": registry_curation}
+    )
 
 
 def test_kmv_audit_covers_both_estimator_branches(spark):
-    out = registry_r12.q_kmv_audit(spark, SF).collect()
-    k = registry_r12._KMV_K
+    out = registry_curation.q_kmv_audit(spark, SF).collect()
+    k = registry_curation._KMV_K
     est = {(r.tbl, r.grp): r.est for r in out if r.stat == "est"}
     n_hashes = {}
     for r in out:

@@ -1,17 +1,17 @@
-"""Round-13 in-round rows: union leg parity and retirement
-bookkeeping for the two funding consolidations (crawlfam_audit =
-fetch_audit + crawl_audit; geofam_audit = geo_assign +
-geo_rollup_join — legs verbatim, the registry_r10/r11/r12 pattern)."""
+"""Leg parity and registration of crawlfam_audit (fetch_audit +
+crawl_audit) and geofam_audit (geo_assign + geo_rollup_join)."""
 
 from __future__ import annotations
 
-from peskas_mozambique_data_pipeline_spark import registry, registry_r13
+from conftest import assert_rows_registered
+
+from peskas_mozambique_data_pipeline_spark import registry, registry_audit
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_crawlfam_audit_leg_parity(spark):
-    union_rows = registry_r13.q_crawlfam_audit(spark, SF)
+    union_rows = registry_audit.q_crawlfam_audit(spark, SF)
     a = registry.RETIRED_QUERIES["fetch_audit"](spark, SF).collect()
     b = registry.RETIRED_QUERIES["crawl_audit"](spark, SF).collect()
     assert union_rows.count() == len(a) + len(b)
@@ -30,7 +30,7 @@ def test_crawlfam_audit_leg_parity(spark):
 
 
 def test_geofam_audit_leg_parity(spark):
-    union_rows = registry_r13.q_geofam_audit(spark, SF)
+    union_rows = registry_audit.q_geofam_audit(spark, SF)
     a = registry.RETIRED_QUERIES["geo_assign"](spark, SF).collect()
     b = registry.RETIRED_QUERIES["geo_rollup_join"](spark, SF).collect()
     assert union_rows.count() == len(a) + len(b)
@@ -49,13 +49,6 @@ def test_geofam_audit_leg_parity(spark):
 
 
 def test_r13_inround_swap_landed():
-    for name in registry_r13.SPARK_QUERIES:
-        assert registry.SPARK_QUERIES[name] is registry_r13.SPARK_QUERIES[name]
-    sql = registry_r13.build_oracle_sql()
-    for name, text in sql.items():
-        assert registry.ORACLE_SQL[name] == text
-    for pair in registry_r13.AUDIT_REPLACES.values():
-        for old in pair:
-            assert old not in registry.SPARK_QUERIES
-            assert old in registry.RETIRED_QUERIES
-            assert old in registry.RETIRED_ORACLE_SQL
+    assert_rows_registered(
+        {"crawlfam_audit": registry_audit, "geofam_audit": registry_audit}
+    )

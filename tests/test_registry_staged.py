@@ -1,122 +1,78 @@
-"""Evidence for the staged r9 consolidation rows (registry_staged):
+"""Checks for the document-profile, document-signature and
+funnel-cohort union rows, the train_shards row, and the two
+augmentation legs of aug_audit:
 
-1. parity — each staged union row reproduces the exact values of the
-   two registered rows it will replace (so consolidation cannot change
-   any hash-verified answer);
-2. oracle — each staged DuckDB twin matches the staged Spark plan
-   bit-for-bit at sf0.001 under the same normalize/compare rules as
-   ``tools/check_correctness.py`` (so r9 registration starts green);
+1. oracle — each row's DuckDB twin matches the Spark plan bit-for-bit
+   at sf0.001;
+2. parity — each union row reproduces the exact values of its legs;
 3. single-materialization — the chained document rows read the
-   documents parquet ONCE (the point of consolidating).
+   documents parquet ONCE.
 """
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
 import pytest
-
-from peskas_mozambique_data_pipeline_spark import registry, registry_staged
-
-SF_DIR = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
-pytestmark = pytest.mark.skipif(
-    not os.path.exists(f"{SF_DIR}/documents.parquet"),
-    reason="driver testdata not present",
+from conftest import (
+    assert_oracle_bit_exact,
+    assert_rows_registered,
+    needs_testdata,
+    oracle_norm,
 )
 
+from peskas_mozambique_data_pipeline_spark import (
+    registry,
+    registry_audit,
+    registry_curation,
+)
 
-def _norm(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = []
-    for r in rows:
-        vals = []
-        for i in order:
-            v = r[i]
-            if isinstance(v, float) and math.isnan(v):
-                v = "NaN"
-            vals.append(v)
-        out.append(tuple(vals))
-    out.sort(key=lambda t: tuple((x is None, str(x)) for x in t))
-    return out
+SF_DIR = "/root/testdata/sf0.001"
+ROWS = {
+    "doc_profile": registry_audit,
+    "doc_signature": registry_audit,
+    "funnel_cohorts": registry_audit,
+    "train_shards": registry_curation,
+    "fim_audit": registry_audit,
+    "span_audit": registry_audit,
+}
 
-
-def _exact(a, b):
-    if a is None or b is None:
-        return a is b
-    if isinstance(a, float) or isinstance(b, float):
-        fa, fb = float(a), float(b)
-        return fa == fb or (math.isnan(fa) and math.isnan(fb))
-    return str(a) == str(b)
+pytestmark = needs_testdata
 
 
-@pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        path = f"{SF_DIR}/{t}.parquet"
-        if os.path.exists(path):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-            )
-    yield con
-    con.close()
-
-
-@pytest.mark.parametrize("name", sorted(registry_staged.STAGED_QUERIES))
-def test_staged_oracle_bit_exact(spark, duck, name):
-    sdf = registry_staged.STAGED_QUERIES[name](spark, SF_DIR)
-    srows = _norm([tuple(r) for r in sdf.collect()], sdf.columns)
-    res = duck.execute(registry_staged.STAGED_ORACLE_SQL[name])
-    dcols = [d[0] for d in res.description]
-    drows = _norm(res.fetchall(), dcols)
-    assert sorted(c.lower() for c in sdf.columns) == sorted(
-        c.lower() for c in dcols
-    )
-    assert len(srows) == len(drows)
-    for rs, rd in zip(srows, drows):
-        assert len(rs) == len(rd)
-        assert all(_exact(a, b) for a, b in zip(rs, rd)), (rs, rd)
+@pytest.mark.parametrize("name", sorted(ROWS))
+def test_staged_oracle_bit_exact(spark, name):
+    fam = ROWS[name]
+    sdf = fam.QUERIES[name](spark, SF_DIR)
+    assert_oracle_bit_exact(sdf, fam.oracle_sql()[name], SF_DIR)
 
 
 def _replaced_pair(spark, name):
-    """The union of the two registered rows, normalized onto the staged
-    row's schema, collected for exact comparison."""
-    a_name, b_name = registry_staged.STAGED_REPLACES[name]
-    # the replaced rows are retired from the registry dict in r9 but
-    # stay importable for exactly this parity check
-    reg = {**registry.SPARK_QUERIES, **registry.RETIRED_QUERIES}
-    a = reg[a_name](spark, SF_DIR)
-    b = reg[b_name](spark, SF_DIR)
+    """The two legs of a union row, retired but importable by name."""
+    a_name, b_name = registry.UNIONS[name]
+    a = registry.RETIRED_QUERIES[a_name](spark, SF_DIR)
+    b = registry.RETIRED_QUERIES[b_name](spark, SF_DIR)
     return a, b
 
 
 def test_doc_profile_parity(spark):
-    staged = registry_staged.q_doc_profile(spark, SF_DIR)
+    staged = registry_audit.q_doc_profile(spark, SF_DIR)
     quality, lang = _replaced_pair(spark, "doc_profile")
     joined = quality.join(lang, "doc_id").select(*staged.columns)
-    assert _norm(
+    assert oracle_norm(
         [tuple(r) for r in staged.collect()], staged.columns
-    ) == _norm([tuple(r) for r in joined.collect()], joined.columns)
+    ) == oracle_norm([tuple(r) for r in joined.collect()], joined.columns)
 
 
 def test_doc_signature_parity(spark):
-    staged = registry_staged.q_doc_signature(spark, SF_DIR)
+    staged = registry_audit.q_doc_signature(spark, SF_DIR)
     kmin, winnow = _replaced_pair(spark, "doc_signature")
     joined = kmin.join(winnow, "doc_id").select(*staged.columns)
-    assert _norm(
+    assert oracle_norm(
         [tuple(r) for r in staged.collect()], staged.columns
-    ) == _norm([tuple(r) for r in joined.collect()], joined.columns)
+    ) == oracle_norm([tuple(r) for r in joined.collect()], joined.columns)
 
 
 def test_funnel_cohorts_parity(spark):
-    staged = registry_staged.q_funnel_cohorts(spark, SF_DIR).collect()
+    staged = registry_audit.q_funnel_cohorts(spark, SF_DIR).collect()
     funnel, cohorts = _replaced_pair(spark, "funnel_cohorts")
     f = {(r["stage_idx"], r["stage"]): r for r in funnel.collect()}
     got_f = {
@@ -145,7 +101,7 @@ def test_funnel_cohorts_parity(spark):
 @pytest.mark.parametrize("name", ["doc_profile", "doc_signature"])
 def test_staged_doc_rows_scan_once(spark, name):
     plan = (
-        registry_staged.STAGED_QUERIES[name](spark, SF_DIR)
+        registry_audit.QUERIES[name](spark, SF_DIR)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -154,40 +110,14 @@ def test_staged_doc_rows_scan_once(spark, name):
 
 
 def test_staged_swap_landed_r9():
-    # the r9 registration swap happened: each staged union row is
-    # registered VERBATIM (same function object, same SQL string — no
-    # staged-vs-registered drift possible) and both rows it replaces
-    # are retired but still importable for the gate/parity tooling
-    for name, pair in registry_staged.STAGED_REPLACES.items():
-        # doc_profile/doc_signature (r9 union rows) themselves retired
-        # into docmeta_audit at r13 — they stay importable via the
-        # retirement map, the same leg-verbatim discipline
-        live = registry.SPARK_QUERIES.get(name)
-        if live is None:
-            assert (
-                registry.RETIRED_QUERIES[name]
-                is registry_staged.STAGED_QUERIES[name]
-            )
-            assert (
-                registry.RETIRED_ORACLE_SQL[name]
-                == registry_staged.STAGED_ORACLE_SQL[name]
-            )
-        else:
-            assert live is registry_staged.STAGED_QUERIES[name]
-            assert (
-                registry.ORACLE_SQL[name]
-                == registry_staged.STAGED_ORACLE_SQL[name]
-            )
-        for old in pair:
-            assert old not in registry.SPARK_QUERIES
-            assert old in registry.RETIRED_QUERIES
-            assert old in registry.RETIRED_ORACLE_SQL
+    assert_rows_registered(
+        ROWS, retired=("doc_profile", "doc_signature", "fim_audit", "span_audit")
+    )
 
 
 def test_train_shards_registered_and_invariants(spark):
-    from peskas_mozambique_data_pipeline_spark import registry_staged as st
-
-    assert registry.SPARK_QUERIES["train_shards"] is st.STAGED_QUERIES["train_shards"]
+    st = registry_curation
+    assert registry.SPARK_QUERIES["train_shards"] is st.QUERIES["train_shards"]
     out = st.q_train_shards(spark, SF_DIR).collect()
     budget = st._SHARD_TOKENS
     # shards are contiguous in training order and cut at the token

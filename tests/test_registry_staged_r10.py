@@ -1,99 +1,26 @@
-"""Evidence for the staged r10 rows (registry_staged_r10): the
-registry_staged pattern — each row lands one round ahead with
-
-1. oracle — the staged DuckDB twin matches the staged Spark plan
-   bit-for-bit at sf0.001 AND sf0.01 under the gate's
-   normalize/compare rules, so r10 registration starts green;
-2. parity — the quant_audit consolidation reproduces the exact values
-   of the two registered rows it will replace;
-3. a not-registered tripwire that flips at the r10 swap.
-"""
+"""quant_audit leg parity and the registration of quant_audit,
+seq_layout, contam_score, psl_domains and card_audit."""
 
 from __future__ import annotations
 
-import math
-import os
+from conftest import assert_rows_registered, needs_testdata
 
-import duckdb
-import pytest
-
-from peskas_mozambique_data_pipeline_spark import registry, registry_staged_r10
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
-pytestmark = pytest.mark.skipif(
-    not os.path.exists("/root/testdata/sf0.001/documents.parquet"),
-    reason="driver testdata not present",
+from peskas_mozambique_data_pipeline_spark import (
+    registry,
+    registry_audit,
+    registry_curation,
+    registry_text,
+    registry_web,
 )
 
-
-def _norm(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = []
-    for r in rows:
-        vals = []
-        for i in order:
-            v = r[i]
-            if isinstance(v, float) and math.isnan(v):
-                v = "NaN"
-            vals.append(v)
-        out.append(tuple(vals))
-    out.sort(key=lambda t: tuple((x is None, str(x)) for x in t))
-    return out
-
-
-def _exact(a, b):
-    if a is None or b is None:
-        return a is b
-    if isinstance(a, float) or isinstance(b, float):
-        fa, fb = float(a), float(b)
-        return fa == fb or (math.isnan(fa) and math.isnan(fb))
-    return str(a) == str(b)
-
-
-def _duck(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(path):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-            )
-    return con
-
-
-STAGED_SQL = registry_staged_r10.build_staged_oracle_sql()
-
-
-@pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"])
-@pytest.mark.parametrize("name", sorted(registry_staged_r10.STAGED_QUERIES))
-@pytest.mark.slow
-def test_staged_r10_oracle_bit_exact(spark, name, sf_dir):
-    sdf = registry_staged_r10.STAGED_QUERIES[name](spark, sf_dir)
-    srows = _norm([tuple(r) for r in sdf.collect()], sdf.columns)
-    con = _duck(sf_dir)
-    try:
-        res = con.execute(STAGED_SQL[name])
-        dcols = [d[0] for d in res.description]
-        drows = _norm(res.fetchall(), dcols)
-    finally:
-        con.close()
-    assert sorted(c.lower() for c in sdf.columns) == sorted(
-        c.lower() for c in dcols
-    )
-    assert len(srows) == len(drows), (name, len(srows), len(drows))
-    for rs, rd in zip(srows, drows):
-        assert all(_exact(a, b) for a, b in zip(rs, rd)), (name, rs, rd)
+pytestmark = needs_testdata
 
 
 def test_quant_audit_parity_with_replaced_rows(spark):
     sf = "/root/testdata/sf0.001"
     staged = {
         (r["stat"], r["query_id"], r["neighbor_id"]): (r["rank"], r["score"])
-        for r in registry_staged_r10.q_quant_audit(spark, sf).collect()
+        for r in registry_audit.q_quant_audit(spark, sf).collect()
     }
     # post-swap the replaced rows live in the retirement map
     a = registry.RETIRED_QUERIES["ann_int8"](spark, sf).collect()
@@ -108,18 +35,12 @@ def test_quant_audit_parity_with_replaced_rows(spark):
 
 
 def test_staged_swap_landed_r10():
-    # the r10 registration swap happened: each staged row is registered
-    # VERBATIM (same function object, same SQL string) and the rows the
-    # consolidation replaces are retired but importable for the gate
-    sql = registry_staged_r10.build_staged_oracle_sql()
-    for name in registry_staged_r10.STAGED_QUERIES:
-        assert (
-            registry.SPARK_QUERIES[name]
-            is registry_staged_r10.STAGED_QUERIES[name]
-        )
-        assert registry.ORACLE_SQL[name] == sql[name]
-    for pair in registry_staged_r10.STAGED_REPLACES.values():
-        for old in pair:
-            assert old not in registry.SPARK_QUERIES
-            assert old in registry.RETIRED_QUERIES
-            assert old in registry.RETIRED_ORACLE_SQL
+    assert_rows_registered(
+        {
+            "quant_audit": registry_audit,
+            "seq_layout": registry_curation,
+            "contam_score": registry_text,
+            "psl_domains": registry_web,
+            "card_audit": registry_curation,
+        }
+    )

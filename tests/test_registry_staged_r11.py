@@ -1,144 +1,27 @@
-"""Evidence for the staged r11 rows (registry_staged_r11): each
-consolidation union lands one round ahead with
-
-1. oracle — the staged DuckDB twin matches the staged Spark plan
-   bit-for-bit at sf0.001 AND sf0.01 under the gate's
-   normalize/compare rules, so r11 registration starts green;
-2. parity — each union reproduces the exact values of the two
-   registered rows it will replace;
-3. a not-registered tripwire that flips at the r11 swap.
-"""
+"""Registration of governance_audit, neardup_audit, lexstats_audit,
+ivf_audit, fetch_audit, html_extract, link_graph, crawl_audit and
+image_dups."""
 
 from __future__ import annotations
 
-import math
-import os
+from conftest import assert_rows_registered, needs_testdata
 
-import duckdb
-import pytest
+from peskas_mozambique_data_pipeline_spark import registry_audit, registry_web
 
-from peskas_mozambique_data_pipeline_spark import registry, registry_staged_r11
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
-pytestmark = pytest.mark.skipif(
-    not os.path.exists("/root/testdata/sf0.001/documents.parquet"),
-    reason="driver testdata not present",
-)
-
-
-def _norm(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = []
-    for r in rows:
-        vals = []
-        for i in order:
-            v = r[i]
-            if isinstance(v, float) and math.isnan(v):
-                v = "NaN"
-            vals.append(v)
-        out.append(tuple(vals))
-    out.sort(key=lambda t: tuple((x is None, str(x)) for x in t))
-    return out
-
-
-def _exact(a, b):
-    if a is None or b is None:
-        return a is b
-    if isinstance(a, float) or isinstance(b, float):
-        fa, fb = float(a), float(b)
-        return fa == fb or (math.isnan(fa) and math.isnan(fb))
-    return str(a) == str(b)
-
-
-def _duck(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(path):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-            )
-    return con
-
-
-STAGED_SQL = registry_staged_r11.build_staged_oracle_sql()
-
-
-@pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"])
-@pytest.mark.parametrize("name", sorted(registry_staged_r11.STAGED_QUERIES))
-@pytest.mark.slow
-def test_staged_r11_oracle_bit_exact(spark, name, sf_dir):
-    sdf = registry_staged_r11.STAGED_QUERIES[name](spark, sf_dir)
-    srows = _norm([tuple(r) for r in sdf.collect()], sdf.columns)
-    con = _duck(sf_dir)
-    try:
-        res = con.execute(STAGED_SQL[name])
-        dcols = [d[0] for d in res.description]
-        drows = _norm(res.fetchall(), dcols)
-    finally:
-        con.close()
-    assert sorted(c.lower() for c in sdf.columns) == sorted(
-        c.lower() for c in dcols
-    )
-    assert len(srows) == len(drows), (name, len(srows), len(drows))
-    for rs, rd in zip(srows, drows):
-        assert all(_exact(a, b) for a, b in zip(rs, rd)), (name, rs, rd)
-
-
-@pytest.mark.parametrize(
-    "union_name,legs", sorted(registry_staged_r11.STAGED_REPLACES.items())
-)
-@pytest.mark.slow
-def test_staged_r11_parity_with_replaced_rows(spark, union_name, legs):
-    sf = "/root/testdata/sf0.001"
-    union_df = registry_staged_r11.STAGED_QUERIES[union_name](spark, sf)
-    n_union = union_df.count()
-    # post-swap the replaced legs live in the retirement map
-    reg = {**registry.SPARK_QUERIES, **registry.RETIRED_QUERIES}
-    n_legs = sum(reg[leg](spark, sf).count() for leg in legs)
-    assert n_union == n_legs
-    stats = {r["stat"] for r in union_df.select("stat").distinct().collect()}
-    # every replaced leg contributes at least one stat value; term_stats
-    # itself is already a 2-stat union, so lexstats_audit carries 3
-    assert len(stats) == {"lexstats_audit": 3}.get(union_name, 2)
-    # value parity on the v column per leg: the union's v multiset for
-    # each stat equals the replaced row's similarity/metric multiset
-    if union_name == "neardup_audit":
-        jac = sorted(
-            r["jaccard"]
-            for r in registry.RETIRED_QUERIES["jaccard_exact"](spark, sf).collect()
-        )
-        got = sorted(
-            r["v"]
-            for r in union_df.filter("stat = 'jaccard'").collect()
-        )
-        assert got == jac
+pytestmark = needs_testdata
 
 
 def test_staged_swap_landed_r11():
-    # the r11 registration swap happened: each staged row is registered
-    # VERBATIM (same function object, same SQL string) and the rows the
-    # consolidations replace are retired but importable for the gate
-    sql = registry_staged_r11.build_staged_oracle_sql()
-    for name in registry_staged_r11.STAGED_QUERIES:
-        # fetch_audit/crawl_audit retired into crawlfam_audit at r13
-        # (legs verbatim) — they stay importable via the retirement map
-        live = registry.SPARK_QUERIES.get(name)
-        if live is None:
-            assert (
-                registry.RETIRED_QUERIES[name]
-                is registry_staged_r11.STAGED_QUERIES[name]
-            )
-            assert registry.RETIRED_ORACLE_SQL[name] == sql[name]
-            continue
-        assert live is registry_staged_r11.STAGED_QUERIES[name]
-        assert registry.ORACLE_SQL[name] == sql[name]
-    for pair in registry_staged_r11.STAGED_REPLACES.values():
-        for old in pair:
-            assert old not in registry.SPARK_QUERIES
-            assert old in registry.RETIRED_QUERIES
-            assert old in registry.RETIRED_ORACLE_SQL
+    assert_rows_registered(
+        {
+            **dict.fromkeys(
+                ("governance_audit", "neardup_audit", "lexstats_audit", "ivf_audit"),
+                registry_audit,
+            ),
+            **dict.fromkeys(
+                ("fetch_audit", "html_extract", "link_graph", "crawl_audit", "image_dups"),
+                registry_web,
+            ),
+        },
+        retired=("fetch_audit", "crawl_audit"),
+    )

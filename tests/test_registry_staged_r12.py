@@ -1,131 +1,34 @@
-"""Evidence for the staged r12 rows (registry_staged_r12): bit-exact
-DuckDB twins at sf0.001 AND sf0.01 under the gate's normalize/compare
-rules, plus a not-registered tripwire that flips at the r12 swap —
-the same discipline as tests/test_registry_staged_r11.py.
-"""
+"""diversity_sample's budget and the registration of diversity_sample,
+audio_audit, sketchfam_audit and video_audit."""
 
 from __future__ import annotations
 
-import math
-import os
+from conftest import assert_rows_registered, needs_testdata
 
-import duckdb
-import pytest
-
-from peskas_mozambique_data_pipeline_spark import registry, registry_staged_r12
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
-pytestmark = pytest.mark.skipif(
-    not os.path.exists("/root/testdata/sf0.001/documents.parquet"),
-    reason="driver testdata not present",
+from peskas_mozambique_data_pipeline_spark import (
+    registry_audit,
+    registry_curation,
+    registry_web,
 )
 
-
-def _norm(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = []
-    for r in rows:
-        vals = []
-        for i in order:
-            v = r[i]
-            if isinstance(v, float) and math.isnan(v):
-                v = "NaN"
-            vals.append(v)
-        out.append(tuple(vals))
-    out.sort(key=lambda t: tuple((x is None, str(x)) for x in t))
-    return out
-
-
-def _exact(a, b):
-    if a is None or b is None:
-        return a is b
-    if isinstance(a, float) or isinstance(b, float):
-        fa, fb = float(a), float(b)
-        return fa == fb or (math.isnan(fa) and math.isnan(fb))
-    return str(a) == str(b)
-
-
-def _duck(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(path):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-            )
-    return con
-
-
-STAGED_SQL = registry_staged_r12.build_staged_oracle_sql()
-
-
-@pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"])
-@pytest.mark.parametrize("name", sorted(registry_staged_r12.STAGED_QUERIES))
-@pytest.mark.slow
-def test_staged_r12_oracle_bit_exact(spark, name, sf_dir):
-    sdf = registry_staged_r12.STAGED_QUERIES[name](spark, sf_dir)
-    srows = _norm([tuple(r) for r in sdf.collect()], sdf.columns)
-    con = _duck(sf_dir)
-    try:
-        res = con.execute(STAGED_SQL[name])
-        dcols = [d[0] for d in res.description]
-        drows = _norm(res.fetchall(), dcols)
-    finally:
-        con.close()
-    assert sorted(c.lower() for c in sdf.columns) == sorted(
-        c.lower() for c in dcols
-    )
-    assert len(srows) == len(drows), (name, len(srows), len(drows))
-    for rs, rd in zip(srows, drows):
-        assert all(_exact(a, b) for a, b in zip(rs, rd)), (name, rs, rd)
+pytestmark = needs_testdata
 
 
 def test_staged_r12_budget_is_binding(spark):
     """The literal budget must constrain the sample at every SF —
     otherwise the row degenerates to identity selection."""
     sf = "/root/testdata/sf0.001"
-    out = registry_staged_r12.STAGED_QUERIES["diversity_sample"](spark, sf)
+    out = registry_curation.q_diversity_sample(spark, sf)
     n = out.count()
-    assert n == registry_staged_r12._DIVERSITY_BUDGET
+    assert n == registry_curation._DIVERSITY_BUDGET
 
 
 def test_staged_swap_landed_r12():
-    # the r12 registration swap happened: each staged row is registered
-    # VERBATIM (same function object, same SQL string) and the rows the
-    # consolidation replaces are retired but importable for the gate
-    sql = registry_staged_r12.build_staged_oracle_sql()
-    for name in registry_staged_r12.STAGED_QUERIES:
-        assert (
-            registry.SPARK_QUERIES[name]
-            is registry_staged_r12.STAGED_QUERIES[name]
-        )
-        assert registry.ORACLE_SQL[name] == sql[name]
-    for pair in registry_staged_r12.STAGED_REPLACES.values():
-        for old in pair:
-            assert old not in registry.SPARK_QUERIES
-            assert old in registry.RETIRED_QUERIES
-            assert old in registry.RETIRED_ORACLE_SQL
-
-
-@pytest.mark.parametrize(
-    "union_name,legs", sorted(registry_staged_r12.STAGED_REPLACES.items())
-)
-@pytest.mark.slow
-def test_staged_r12_parity_with_replaced_rows(spark, union_name, legs):
-    """Each consolidation union reproduces the registered legs'
-    row counts and carries one stat value per leg family."""
-    sf = "/root/testdata/sf0.001"
-    union_df = registry_staged_r12.STAGED_QUERIES[union_name](spark, sf)
-    n_union = union_df.count()
-    # post-swap the replaced legs live in the retirement map
-    reg = {**registry.SPARK_QUERIES, **registry.RETIRED_QUERIES}
-    n_legs = sum(reg[leg](spark, sf).count() for leg in legs)
-    assert n_union == n_legs
-    stats = {r["stat"] for r in union_df.select("stat").distinct().collect()}
-    # sketch_audit is itself a 2-stat union (hll + cms), so the merged
-    # row carries 3
-    assert len(stats) == {"sketchfam_audit": 3}.get(union_name, 2)
+    assert_rows_registered(
+        {
+            "diversity_sample": registry_curation,
+            "audio_audit": registry_web,
+            "sketchfam_audit": registry_audit,
+            "video_audit": registry_web,
+        }
+    )

@@ -1,90 +1,26 @@
-"""Evidence for the staged r13 row (registry_staged_r13): bit-exact
-DuckDB twin at sf0.001 AND sf0.01 plus the not-registered tripwire —
-the same discipline as the r11/r12 staged tests."""
+"""pca_cov, corpus_card and nearest_audit semantics and the
+registration of pca_cov, audio_fp, corpus_card, docmeta_audit,
+retrieval_audit, capsel_audit, nearest_audit and release_fold."""
 
 from __future__ import annotations
 
-import math
-import os
-
 import duckdb
-import pytest
+from conftest import TESTDATA, assert_rows_registered, needs_testdata, oracle_duck
 
-from peskas_mozambique_data_pipeline_spark import registry, registry_staged_r13
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
-pytestmark = pytest.mark.skipif(
-    not os.path.exists("/root/testdata/sf0.001/documents.parquet"),
-    reason="driver testdata not present",
+from peskas_mozambique_data_pipeline_spark import (
+    registry_audit,
+    registry_curation,
+    registry_misc,
+    registry_text,
+    registry_web,
 )
 
-
-def _norm(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = []
-    for r in rows:
-        vals = []
-        for i in order:
-            v = r[i]
-            if isinstance(v, float) and math.isnan(v):
-                v = "NaN"
-            vals.append(v)
-        out.append(tuple(vals))
-    out.sort(key=lambda t: tuple((x is None, str(x)) for x in t))
-    return out
-
-
-def _exact(a, b):
-    if a is None or b is None:
-        return a is b
-    if isinstance(a, float) or isinstance(b, float):
-        fa, fb = float(a), float(b)
-        return fa == fb or (math.isnan(fa) and math.isnan(fb))
-    return str(a) == str(b)
-
-
-def _duck(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(path):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-            )
-    return con
-
-
-STAGED_SQL = registry_staged_r13.build_staged_oracle_sql()
-
-
-@pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"])
-@pytest.mark.parametrize("name", sorted(registry_staged_r13.STAGED_QUERIES))
-@pytest.mark.slow
-def test_staged_r13_oracle_bit_exact(spark, name, sf_dir):
-    sdf = registry_staged_r13.STAGED_QUERIES[name](spark, sf_dir)
-    srows = _norm([tuple(r) for r in sdf.collect()], sdf.columns)
-    con = _duck(sf_dir)
-    try:
-        res = con.execute(STAGED_SQL[name])
-        dcols = [d[0] for d in res.description]
-        drows = _norm(res.fetchall(), dcols)
-    finally:
-        con.close()
-    assert sorted(c.lower() for c in sdf.columns) == sorted(
-        c.lower() for c in dcols
-    )
-    assert len(srows) == len(drows), (name, len(srows), len(drows))
-    for rs, rd in zip(srows, drows):
-        assert all(_exact(a, b) for a, b in zip(rs, rd)), (name, rs, rd)
+pytestmark = needs_testdata
 
 
 def test_staged_r13_cell_count_is_triangle(spark):
     """d=64 → exactly d(d+1)/2 = 2080 upper-triangle cells."""
-    out = registry_staged_r13.STAGED_QUERIES["pca_cov"](
+    out = registry_text.q_pca_cov(
         spark, "/root/testdata/sf0.001"
     )
     assert out.count() == 64 * 65 // 2
@@ -97,7 +33,7 @@ def test_staged_r13_corpus_card_retention_semantics(spark):
     rows = sorted(
         (r.pos, r.zone, r.n_rows, r.n_tokens, r.n_chars,
          r.retained_rows_permille)
-        for r in registry_staged_r13.STAGED_QUERIES["corpus_card"](
+        for r in registry_curation.q_corpus_card(
             spark, "/root/testdata/sf0.001"
         ).collect()
     )
@@ -105,7 +41,7 @@ def test_staged_r13_corpus_card_retention_semantics(spark):
         "corpus_ingested", "corpus_filtered", "corpus_deduped",
         "corpus_packs",
     ]
-    con = _duck("/root/testdata/sf0.001")
+    con = oracle_duck(f"{TESTDATA}/sf0.001")
     try:
         n_all = con.execute("SELECT COUNT(*) FROM documents").fetchone()[0]
         n_filt = con.execute(
@@ -131,44 +67,18 @@ def test_staged_r13_corpus_card_retention_semantics(spark):
 
 
 def test_staged_swap_landed_r13():
-    # the r13 registration swap happened: each staged row is registered
-    # VERBATIM (same function object, same SQL string) and the rows the
-    # consolidations replace are retired but importable for the gate
-    sql = registry_staged_r13.build_staged_oracle_sql()
-    for name in registry_staged_r13.STAGED_QUERIES:
-        assert (
-            registry.SPARK_QUERIES[name]
-            is registry_staged_r13.STAGED_QUERIES[name]
-        )
-        assert registry.ORACLE_SQL[name] == sql[name]
-    for pair in registry_staged_r13.STAGED_REPLACES.values():
-        for old in pair:
-            assert old not in registry.SPARK_QUERIES
-            assert old in registry.RETIRED_QUERIES
-            assert old in registry.RETIRED_ORACLE_SQL
-
-
-@pytest.mark.parametrize(
-    "union_name,legs", sorted(registry_staged_r13.STAGED_REPLACES.items())
-)
-@pytest.mark.slow
-def test_staged_r13_parity_with_replaced_rows(spark, union_name, legs):
-    """Each consolidation reproduces the registered legs' row counts
-    (1:1-join rows keep each leg's count; stat-tagged unions sum)."""
-    sf = "/root/testdata/sf0.001"
-    union_df = registry_staged_r13.STAGED_QUERIES[union_name](spark, sf)
-    n_union = union_df.count()
-    reg = {**registry.SPARK_QUERIES, **registry.RETIRED_QUERIES}
-    if union_name == "docmeta_audit":
-        for leg in legs:
-            assert n_union == reg[leg](spark, sf).count()
-    else:
-        n_legs = sum(reg[leg](spark, sf).count() for leg in legs)
-        assert n_union == n_legs
-        stats = {
-            r["stat"] for r in union_df.select("stat").distinct().collect()
+    assert_rows_registered(
+        {
+            "pca_cov": registry_text,
+            "audio_fp": registry_web,
+            "corpus_card": registry_curation,
+            "docmeta_audit": registry_audit,
+            "retrieval_audit": registry_audit,
+            "capsel_audit": registry_audit,
+            "nearest_audit": registry_misc,
+            "release_fold": registry_curation,
         }
-        assert len(stats) == 2
+    )
 
 
 def test_staged_r13_nearest_audit_margins():
@@ -189,8 +99,8 @@ def test_staged_r13_nearest_audit_margins():
         ).fetchall()
     ]
     con.close()
-    sites = registry_staged_r13.NEAREST_SITES
-    rng = registry_staged_r13._NEAREST_RANGE_M
+    sites = registry_misc.NEAREST_SITES
+    rng = registry_misc._NEAREST_RANGE_M
     min_gate, min_round, min_gap = 1e18, 1e18, 1e18
     for k in keys:
         lon = 30.0 + (k * 37 % 1000) / 100.0

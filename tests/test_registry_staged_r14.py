@@ -1,91 +1,23 @@
-"""Evidence for the staged r14 row (registry_staged_r14): bit-exact
-DuckDB twin at sf0.001 AND sf0.01 plus the not-registered tripwire —
-the same discipline as the r12/r13 staged tests."""
+"""main_content_audit and diff_audit semantics and the registration of
+main_content_audit, diff_audit, bandpairs_audit and dedupfam_audit."""
 
 from __future__ import annotations
 
-import math
-import os
+from conftest import assert_rows_registered, needs_testdata
 
-import duckdb
-import pytest
-
-from peskas_mozambique_data_pipeline_spark import registry, registry_staged_r14
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
-pytestmark = pytest.mark.skipif(
-    not os.path.exists("/root/testdata/sf0.001/documents.parquet"),
-    reason="driver testdata not present",
+from peskas_mozambique_data_pipeline_spark import (
+    registry_audit,
+    registry_curation,
+    registry_web,
 )
 
-
-def _norm(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = []
-    for r in rows:
-        vals = []
-        for i in order:
-            v = r[i]
-            if isinstance(v, float) and math.isnan(v):
-                v = "NaN"
-            vals.append(v)
-        out.append(tuple(vals))
-    out.sort(key=lambda t: tuple((x is None, str(x)) for x in t))
-    return out
-
-
-def _exact(a, b):
-    if a is None or b is None:
-        return a is b
-    if isinstance(a, float) or isinstance(b, float):
-        fa, fb = float(a), float(b)
-        return fa == fb or (math.isnan(fa) and math.isnan(fb))
-    return str(a) == str(b)
-
-
-def _duck(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(path):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-            )
-    return con
-
-
-STAGED_SQL = registry_staged_r14.build_staged_oracle_sql()
-
-
-@pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"])
-@pytest.mark.parametrize("name", sorted(registry_staged_r14.STAGED_QUERIES))
-@pytest.mark.slow
-def test_staged_r14_oracle_bit_exact(spark, name, sf_dir):
-    sdf = registry_staged_r14.STAGED_QUERIES[name](spark, sf_dir)
-    srows = _norm([tuple(r) for r in sdf.collect()], sdf.columns)
-    con = _duck(sf_dir)
-    try:
-        res = con.execute(STAGED_SQL[name])
-        dcols = [d[0] for d in res.description]
-        drows = _norm(res.fetchall(), dcols)
-    finally:
-        con.close()
-    assert sorted(c.lower() for c in sdf.columns) == sorted(
-        c.lower() for c in dcols
-    )
-    assert len(srows) == len(drows), (name, len(srows), len(drows))
-    for rs, rd in zip(srows, drows):
-        assert all(_exact(a, b) for a, b in zip(rs, rd)), (name, rs, rd)
+pytestmark = needs_testdata
 
 
 def test_staged_r14_prose_gate_is_exercised(spark):
     """Both branches of the one data-dependent decision (the prose
     min-chars gate) must occur at sf0.001, or the row degenerates."""
-    out = registry_staged_r14.STAGED_QUERIES["main_content_audit"](
+    out = registry_web.q_main_content_audit(
         spark, "/root/testdata/sf0.001"
     ).collect()
     kept = [r for r in out if r.main_text]
@@ -99,25 +31,18 @@ def test_staged_r14_prose_gate_is_exercised(spark):
 
 
 def test_staged_swap_landed_r14():
-    # the r14 registration swap happened: each staged row is registered
-    # VERBATIM (same function object, same SQL string) and the rows the
-    # consolidations replace are retired but importable for the gate
-    sql = registry_staged_r14.build_staged_oracle_sql()
-    for name in registry_staged_r14.STAGED_QUERIES:
-        assert (
-            registry.SPARK_QUERIES[name]
-            is registry_staged_r14.STAGED_QUERIES[name]
-        )
-        assert registry.ORACLE_SQL[name] == sql[name]
-    for pair in registry_staged_r14.STAGED_REPLACES.values():
-        for old in pair:
-            assert old not in registry.SPARK_QUERIES
-            assert old in registry.RETIRED_QUERIES
-            assert old in registry.RETIRED_ORACLE_SQL
+    assert_rows_registered(
+        {
+            "main_content_audit": registry_web,
+            "diff_audit": registry_curation,
+            "bandpairs_audit": registry_audit,
+            "dedupfam_audit": registry_audit,
+        }
+    )
 
 
 def test_staged_r14_diff_audit_all_statuses_present(spark):
-    out = registry_staged_r14.STAGED_QUERIES["diff_audit"](
+    out = registry_curation.q_diff_audit(
         spark, "/root/testdata/sf0.001"
     ).collect()
     statuses = {r.status for r in out}
@@ -131,22 +56,3 @@ def test_staged_r14_diff_audit_all_statuses_present(spark):
             assert r.doc_id % 7 == 0 and r.doc_id % 11 != 0
         else:
             assert r.doc_id >= 1_000_000
-
-
-@pytest.mark.parametrize(
-    "union_name,legs", sorted(registry_staged_r14.STAGED_REPLACES.items())
-)
-@pytest.mark.slow
-def test_staged_r14_parity_with_replaced_rows(spark, union_name, legs):
-    """Each funding consolidation reproduces the registered legs' row
-    counts (stat-tagged unions sum) and carries one stat per leg
-    family; every leg is a live registry row until the r14 swap."""
-    sf = "/root/testdata/sf0.001"
-    union_df = registry_staged_r14.STAGED_QUERIES[union_name](spark, sf)
-    reg = {**registry.SPARK_QUERIES, **registry.RETIRED_QUERIES}
-    for leg in legs:
-        assert leg in registry.RETIRED_QUERIES  # retired by the r14 swap
-    n_legs = sum(reg[leg](spark, sf).count() for leg in legs)
-    assert union_df.count() == n_legs
-    stats = {r["stat"] for r in union_df.select("stat").distinct().collect()}
-    assert len(stats) == 2

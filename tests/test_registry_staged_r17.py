@@ -1,94 +1,217 @@
-"""Evidence for the staged r17 row (registry_staged_r17): bit-exact
-DuckDB twin at sf0.001 AND sf0.01 plus the not-registered tripwire —
-the same discipline as the r12-r16 staged tests."""
+"""DuckDB-oracle cases for two operator families, kept as test-local
+query rows (they hold no registry slot):
+
+* ``dq_audit`` — the declarative data-quality expectations framework
+  (``operators/expectations.py``: check / annotate / uniqueness /
+  referential reports).  Four legs: ``report`` rows with the one-scan
+  violation counts for three row-local rules over orders (genuine
+  violations on BOTH sides at every SF, including the
+  NULL-counts-as-violation semantics); the ``unique`` leg on o_custkey
+  (every duplicated key's rows count); the ``referential`` leg against
+  an analytic mod-3 subset of customer; and ``ann`` rows with the
+  per-order failed-rule array, comma-joined in declaration order.
+  Every quantity is an exact integer except ``frac`` = round(v/n, 6).
+  The DuckDB twin replays each count with CASE arithmetic, the
+  duplicate-key sum with a grouped HAVING, the anti-join with NOT IN
+  over the same analytic dim, and the annotation with concat_ws (which
+  skips the NULL branches exactly like array_join over array_compact).
+* ``cdc_audit`` — ordered change-stream application
+  (``operators/merge.py::apply_cdc``); see its section.
+"""
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
 import pytest
+from conftest import TESTDATA, assert_oracle_bit_exact, needs_testdata
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from peskas_mozambique_data_pipeline_spark import registry, registry_staged_r17
+pytestmark = needs_testdata
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+_PRICE_HI = 150_000.0
+_STATUSES = ("O", "F")
+_PRIO = "1-%"
 
-pytestmark = pytest.mark.skipif(
-    not os.path.exists("/root/testdata/sf0.001/documents.parquet"),
-    reason="driver testdata not present",
+
+def _rules():
+    from peskas_mozambique_data_pipeline_spark.operators.expectations import expect
+
+    return [
+        expect("price_hi", F.col("o_totalprice") > _PRICE_HI),
+        expect("status_known", F.col("o_orderstatus").isin(*_STATUSES)),
+        expect("prio_urgent", F.col("o_orderpriority").like(_PRIO)),
+    ]
+
+
+def q_dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from peskas_mozambique_data_pipeline_spark.operators import expectations as dq
+    from peskas_mozambique_data_pipeline_spark.session import read_table
+
+    orders = read_table(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer")
+    dim = cust.filter(F.col("c_custkey") % 3 != 0).select("c_custkey")
+    report = dq.full_report(
+        orders,
+        rules=_rules(),
+        unique_keys=[["o_custkey"]],
+        dims=[("o_custkey", dim, "c_custkey")],
+    ).select(
+        F.lit("report").alias("leg"),
+        F.col("rule").cast("string").alias("k1"),
+        F.col("kind").cast("string").alias("k2"),
+        F.col("n_violations").cast("long").alias("n1"),
+        F.col("n_rows").cast("long").alias("n2"),
+        F.col("frac").cast("double").alias("v"),
+    )
+    ann = dq.annotate(orders, _rules()).select(
+        F.lit("ann").alias("leg"),
+        F.col("o_orderkey").cast("string").alias("k1"),
+        F.array_join("violations", ",").alias("k2"),
+        F.lit(None).cast("long").alias("n1"),
+        F.lit(None).cast("long").alias("n2"),
+        F.lit(None).cast("double").alias("v"),
+    )
+    return report.unionByName(ann)
+
+
+def _sql_dq_audit() -> str:
+    fails = {
+        "price_hi": f"NOT coalesce(o_totalprice > {_PRICE_HI!r}, FALSE)",
+        "status_known": "NOT coalesce(o_orderstatus IN ('O', 'F'), FALSE)",
+        "prio_urgent": f"NOT coalesce(o_orderpriority LIKE '{_PRIO}', FALSE)",
+    }
+    count_rows = " UNION ALL ".join(
+        f"SELECT '{name}' AS rule, 'row' AS kind, "
+        f"SUM(CASE WHEN {cond} THEN 1 ELSE 0 END) AS v, COUNT(*) AS n "
+        "FROM orders"
+        for name, cond in fails.items()
+    )
+    ann_cases = ", ".join(
+        f"CASE WHEN {cond} THEN '{name}' END" for name, cond in fails.items()
+    )
+    return f"""
+WITH counts AS (
+  {count_rows}
+  UNION ALL
+  SELECT 'unique(o_custkey)', 'unique',
+         coalesce((SELECT SUM(c) FROM (
+            SELECT COUNT(*) AS c FROM orders GROUP BY o_custkey
+            HAVING COUNT(*) > 1)), 0),
+         COUNT(*)
+  FROM orders
+  UNION ALL
+  SELECT 'in_dim(o_custkey)', 'referential',
+         SUM(CASE WHEN o_custkey NOT IN (
+            SELECT c_custkey FROM customer WHERE c_custkey % 3 <> 0)
+            THEN 1 ELSE 0 END),
+         COUNT(*)
+  FROM orders
 )
+SELECT 'report' AS leg, CAST(rule AS VARCHAR) AS k1,
+       CAST(kind AS VARCHAR) AS k2, CAST(v AS BIGINT) AS n1,
+       CAST(n AS BIGINT) AS n2,
+       CAST(CASE WHEN n > 0 THEN round(CAST(v AS DOUBLE) / n, 6)
+                 ELSE 0.0 END AS DOUBLE) AS v
+FROM counts
+UNION ALL
+SELECT 'ann', CAST(o_orderkey AS VARCHAR),
+       concat_ws(',', {ann_cases}),
+       CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE)
+FROM orders
+"""
 
 
-def _norm(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = []
-    for r in rows:
-        vals = []
-        for i in order:
-            v = r[i]
-            if isinstance(v, float) and math.isnan(v):
-                v = "NaN"
-            vals.append(v)
-        out.append(tuple(vals))
-    out.sort(key=lambda t: tuple((x is None, str(x)) for x in t))
-    return out
+SQL_DQ_AUDIT = _sql_dq_audit()
 
 
-def _exact(a, b):
-    if a is None or b is None:
-        return a is b
-    if isinstance(a, float) or isinstance(b, float):
-        fa, fb = float(a), float(b)
-        return fa == fb or (math.isnan(fa) and math.isnan(fb))
-    return str(a) == str(b)
+# ---------------------------------------------------------------------------
+# cdc_audit — ordered change-stream application (``operators/merge.py::
+# apply_cdc``) under the hard oracle.  Target = customers (exact
+# integer balance cents); changes = an ANALYTIC CDC view of orders
+# (key = o_custkey, seq = o_orderkey — unique, so (key, seq) satisfies
+# the strict contract; every 7th order is a delete, the rest upserts
+# carrying a synthesized name + the order's total in cents).  The
+# final state puts every apply_cdc decision under the value hash:
+# untouched target rows survive verbatim, the per-key HIGHEST-seq
+# change wins, delete winners remove the key, upsert winners replace
+# the payload.  The DuckDB twin replays the winner window
+# (ROW_NUMBER over seq DESC), the untouched anti-join, and the upsert
+# union — decision for decision; every quantity is an exact integer
+# or string.  The strict guard (folded assert) runs live on the Spark
+# side with uniqueness guaranteed by construction.
 
 
-def _duck(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(path):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-            )
-    return con
+def q_cdc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from peskas_mozambique_data_pipeline_spark.operators.merge import apply_cdc
+    from peskas_mozambique_data_pipeline_spark.session import read_table
+
+    cust = read_table(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
+    target = cust.select(
+        "c_custkey",
+        F.col("c_name").cast("string").alias("c_name"),
+        F.round(F.col("c_acctbal") * 100).cast("long").alias("bal_c"),
+    )
+    # custkeys ≡ 0 (mod 5) receive NO changes, so the untouched-target
+    # branch is populated at every SF alongside replace/delete/insert
+    changes = orders.filter(F.col("o_custkey") % 5 != 0).select(
+        F.col("o_custkey").alias("c_custkey"),
+        F.col("o_orderkey").alias("seq"),
+        F.when(F.col("o_orderkey") % 7 == 0, F.lit("delete"))
+        .otherwise(F.lit("upsert"))
+        .alias("op"),
+        F.concat(F.lit("u"), F.col("o_orderkey").cast("string")).alias(
+            "c_name"
+        ),
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("bal_c"),
+    )
+    out = apply_cdc(target, changes, ["c_custkey"])
+    return out.select(
+        F.col("c_custkey").cast("long").alias("c_custkey"),
+        F.col("c_name").cast("string").alias("c_name"),
+        F.col("bal_c").cast("long").alias("bal_c"),
+    )
 
 
-STAGED_SQL = registry_staged_r17.build_staged_oracle_sql()
+SQL_CDC_AUDIT = """
+WITH t AS (
+  SELECT c_custkey, CAST(c_name AS VARCHAR) AS c_name,
+         CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c
+  FROM customer
+),
+ch AS (
+  SELECT o_custkey AS c_custkey, o_orderkey AS seq,
+         CASE WHEN o_orderkey % 7 = 0 THEN 'delete' ELSE 'upsert' END AS op,
+         'u' || CAST(o_orderkey AS VARCHAR) AS c_name,
+         CAST(round(o_totalprice * 100) AS BIGINT) AS bal_c
+  FROM orders WHERE o_custkey % 5 <> 0
+),
+latest AS (
+  SELECT * FROM (
+    SELECT ch.*, ROW_NUMBER() OVER (
+      PARTITION BY c_custkey ORDER BY seq DESC) AS rn
+    FROM ch
+  ) WHERE rn = 1
+)
+SELECT CAST(t.c_custkey AS BIGINT) AS c_custkey, t.c_name,
+       CAST(t.bal_c AS BIGINT) AS bal_c
+FROM t
+WHERE t.c_custkey NOT IN (SELECT c_custkey FROM latest)
+UNION ALL
+SELECT CAST(c_custkey AS BIGINT), c_name, CAST(bal_c AS BIGINT)
+FROM latest WHERE op = 'upsert'
+"""
 
 
-@pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001", "/root/testdata/sf0.01"])
-@pytest.mark.parametrize("name", sorted(registry_staged_r17.STAGED_QUERIES))
+QUERIES = {"dq_audit": q_dq_audit, "cdc_audit": q_cdc_audit}
+ORACLE_SQL = {"dq_audit": SQL_DQ_AUDIT, "cdc_audit": SQL_CDC_AUDIT}
+
+
+@pytest.mark.parametrize("sf_dir", [f"{TESTDATA}/sf0.001", f"{TESTDATA}/sf0.01"])
+@pytest.mark.parametrize("name", sorted(QUERIES))
 @pytest.mark.slow
 def test_staged_r17_oracle_bit_exact(spark, name, sf_dir):
-    sdf = registry_staged_r17.STAGED_QUERIES[name](spark, sf_dir)
-    srows = _norm([tuple(r) for r in sdf.collect()], sdf.columns)
-    con = _duck(sf_dir)
-    try:
-        res = con.execute(STAGED_SQL[name])
-        dcols = [d[0] for d in res.description]
-        drows = _norm(res.fetchall(), dcols)
-    finally:
-        con.close()
-    assert sorted(c.lower() for c in sdf.columns) == sorted(
-        c.lower() for c in dcols
-    )
-    assert len(srows) == len(drows), (name, len(srows), len(drows))
-    for rs, rd in zip(srows, drows):
-        assert all(_exact(a, b) for a, b in zip(rs, rd)), (name, rs, rd)
-
-
-def test_staged_r17_not_registered_yet():
-    for name in registry_staged_r17.STAGED_QUERIES:
-        assert name not in registry.SPARK_QUERIES
-
-
-
-
+    assert_oracle_bit_exact(QUERIES[name](spark, sf_dir), ORACLE_SQL[name], sf_dir)
 
 
 def test_staged_r17_dq_semantics(spark):
@@ -97,7 +220,7 @@ def test_staged_r17_dq_semantics(spark):
     counts all copies of duplicated keys, the referential leg tracks
     the mod-3 dim, and the annotation leg carries multi-rule rows."""
     sf = "/root/testdata/sf0.001"
-    rows = registry_staged_r17.STAGED_QUERIES["dq_audit"](spark, sf).collect()
+    rows = q_dq_audit(spark, sf).collect()
     rep = {r.k1: r for r in rows if r.leg == "report"}
     n = rep["price_hi"].n2
     for rule in ("price_hi", "status_known", "prio_urgent"):
@@ -120,9 +243,7 @@ def test_staged_r17_cdc_semantics(spark):
 
     state = {
         r.c_custkey: (r.c_name, r.bal_c)
-        for r in registry_staged_r17.STAGED_QUERIES["cdc_audit"](
-            spark, sf
-        ).collect()
+        for r in q_cdc_audit(spark, sf).collect()
     }
     con = duckdb.connect()
     cust = con.execute(
@@ -156,27 +277,3 @@ def test_staged_r17_cdc_semantics(spark):
                   if ck not in cust_keys and latest[ck][0] % 7 != 0)
     assert untouched > 0 and deleted > 0
     assert len(state) == len(want) >= untouched + inserts
-
-
-@pytest.mark.parametrize(
-    "union_name,legs", sorted(registry_staged_r17.STAGED_REPLACES.items())
-)
-@pytest.mark.slow
-def test_staged_r17_parity_with_replaced_rows(spark, union_name, legs):
-    """Each funding consolidation reproduces the registered legs' row
-    counts (stat-tagged unions sum); every leg is a live registry row
-    until the r17 swap lands."""
-    sf = "/root/testdata/sf0.001"
-    union_df = registry_staged_r17.STAGED_QUERIES[union_name](spark, sf)
-    reg = {**registry.SPARK_QUERIES, **registry.RETIRED_QUERIES}
-    for leg in legs:
-        assert leg in registry.SPARK_QUERIES  # rotates into the r17 head
-    n_legs = sum(reg[leg](spark, sf).count() for leg in legs)
-    assert union_df.count() == n_legs
-    stats = {r["stat"] for r in union_df.select("stat").distinct().collect()}
-    # webfam carries crawlfam's own stat tags + 'html'; docfam carries
-    # docmeta + the lexstats family tags — both sides present
-    if union_name == "webfam_audit":
-        assert "html" in stats and len(stats) >= 3
-    else:
-        assert "docmeta" in stats and len(stats) >= 2

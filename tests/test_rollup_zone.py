@@ -8,6 +8,8 @@ from __future__ import annotations
 import os
 
 import pytest
+from conftest import TESTDATA, assert_oracle_bit_exact, needs_testdata
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from peskas_mozambique_data_pipeline_spark.streaming import (
@@ -170,3 +172,94 @@ def test_random_interleavings_congruent_with_state(spark, tmp_path):
          compact_every=5)
     assert _rollup(spark, zone) == _from_state(spark, zone)
     assert _rollup(spark, zone)  # non-degenerate: groups survive
+
+
+# ---------------------------------------------------------------------------
+# ivm_audit — the incremental-view-maintenance delta math
+# (``rollup_zone._contribution_delta`` over ``cdc_zone._winners``, the
+# retract/apply fold the rollup zone ships per micro-batch) against a
+# DuckDB oracle.  State = customers keyed by custkey, grouped by
+# ``c_mktsegment``, measured in exact acctbal cents; the change batch is
+# an analytic view of orders (key ``o_custkey``, seq ``o_orderkey``,
+# delete on mod-7) grouped by ``o_orderpriority``, so every winner MOVES
+# its key across group domains and the delta carries genuine
+# retractions (negative counts/sums in the mktsegment groups) AND
+# applications (positive in the priority groups) at every SF.  The twin
+# replays the winner window, the touched-key semi-join and the
+# ±1-weighted group fold decision for decision; every quantity is an
+# exact integer.
+
+_S = "string"
+_L = "long"
+
+
+def q_ivm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from peskas_mozambique_data_pipeline_spark.session import read_table
+    from peskas_mozambique_data_pipeline_spark.streaming.cdc_zone import _winners
+    from peskas_mozambique_data_pipeline_spark.streaming.rollup_zone import _contribution_delta
+
+    cust = read_table(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
+    state = cust.select(
+        F.col("c_custkey").alias("k"),
+        F.col("c_mktsegment").alias("grp"),
+        F.round(F.col("c_acctbal") * 100).cast(_L).alias("cents"),
+    )
+    ch = orders.filter(F.col("o_custkey") % 5 != 0).select(
+        F.col("o_custkey").alias("k"),
+        F.col("o_orderkey").alias("seq"),
+        F.when(F.col("o_orderkey") % 7 == 0, F.lit("delete"))
+        .otherwise(F.lit("upsert"))
+        .alias("op"),
+        F.col("o_orderpriority").alias("grp"),
+        F.round(F.col("o_totalprice") * 100).cast(_L).alias("cents"),
+    )
+    win = _winners(ch, ["k"], "seq", "op", "upsert", "delete", strict=True)
+    new = win.filter(F.col("op") == "upsert").select("grp", "cents")
+    old = state.join(win.select("k"), "k", "left_semi").select(
+        "grp", "cents"
+    )
+    delta = _contribution_delta(old, new, ["grp"], ["cents"])
+    return delta.select(
+        F.col("grp").cast(_S).alias("grp"),
+        F.col("n_rows").cast(_L).alias("n_rows"),
+        F.col("sum_cents").cast(_L).alias("sum_cents"),
+    )
+
+
+SQL_IVM_AUDIT = """
+WITH state AS (
+  SELECT c_custkey AS k, c_mktsegment AS grp,
+         CAST(round(c_acctbal * 100) AS BIGINT) AS cents
+  FROM customer
+),
+ch AS (
+  SELECT o_custkey AS k, o_orderkey AS seq,
+         CASE WHEN o_orderkey % 7 = 0 THEN 'delete' ELSE 'upsert' END AS op,
+         o_orderpriority AS grp,
+         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+  FROM orders WHERE o_custkey % 5 <> 0
+),
+win AS (
+  SELECT * FROM (
+    SELECT ch.*, ROW_NUMBER() OVER (PARTITION BY k ORDER BY seq DESC) AS rn
+    FROM ch
+  ) WHERE rn = 1
+),
+contrib AS (
+  SELECT s.grp, -1 AS w, -s.cents AS cents
+  FROM state s WHERE s.k IN (SELECT k FROM win)
+  UNION ALL
+  SELECT grp, 1, cents FROM win WHERE op = 'upsert'
+)
+SELECT CAST(grp AS VARCHAR) AS grp, CAST(SUM(w) AS BIGINT) AS n_rows,
+       CAST(SUM(cents) AS BIGINT) AS sum_cents
+FROM contrib GROUP BY grp
+"""
+
+
+@needs_testdata
+@pytest.mark.slow
+@pytest.mark.parametrize("sf_dir", [f"{TESTDATA}/sf0.001", f"{TESTDATA}/sf0.01"])
+def test_ivm_delta_duckdb_oracle(spark, sf_dir):
+    assert_oracle_bit_exact(q_ivm_audit(spark, sf_dir), SQL_IVM_AUDIT, sf_dir)
